@@ -179,6 +179,12 @@ class TDigest(Sketch):
         self._flush()
         return float(self.weights.sum())
 
+    @property
+    def n(self) -> int:
+        """Absorbed weight rounded to an integer: the value count after
+        unit-weight updates, the same count as KLL/DDSketch ``n``."""
+        return int(round(self.total_weight))
+
     # --- serialization --------------------------------------------------
     def _payload(self) -> tuple[bytes, bytes]:
         self._flush()

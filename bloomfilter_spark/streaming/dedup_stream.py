@@ -13,23 +13,28 @@ keeps EXACT key state — at 10^12 turns that is terabytes of state store.
   document is noise but a kept duplicate is a defect;
 - in-batch duplicates are removed exactly (per-batch `dropDuplicates`).
 
-Epoch handling mirrors `SketchAccumulator`: the filter + last epoch persist
-atomically per batch, replayed epochs are skipped on restart (the sink saw
-those rows already — at-least-once emit during the crash window, never
-duplicate emission after a persisted epoch).
+`ScalableBloomDedupStream` is the same operator over a growing
+ScalableBloomFilter; it overrides only the state and the insert step.
+
+Epoch handling mirrors `SketchAccumulator` (one `_EpochFile`): the filter,
+last epoch and row metrics persist atomically per batch, replayed epochs
+are skipped on restart (the sink saw those rows already — at-least-once
+emit during the crash window, never duplicate emission after a persisted
+epoch).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..agg import build_sketch, with_membership
 from ..config import DEFAULT_SEED
-from ..sizing import suggest_sizing
+from ..sizing import analytic_fpr, suggest_sizing
 from ..sketches.bloom import BloomFilter
+from ..sketches.scalable import ScalableBloomFilter
+from .sketch_stream import _EpochFile
 
 
 class BloomDedupStream:
@@ -50,51 +55,45 @@ class BloomDedupStream:
     `operators.sharded` tables instead — this class is the in-memory tier.
     """
 
+    _STATE_FILE = "dedup_state.bin"
+
     def __init__(self, cols, capacity: int, fpr: float = 0.01,
                  sink: Callable[[DataFrame, int], None] | str | None = None,
                  seed: int = DEFAULT_SEED, state_dir: str | None = None):
+        self.filter = self._open(cols, BloomFilter(*suggest_sizing(capacity, fpr)),
+                                 sink, seed, state_dir)
+
+    def _open(self, cols, state, sink, seed, state_dir):
+        """Set the shared fields; return ``state`` or its restored copy."""
         self.cols = [cols] if isinstance(cols, str) else list(cols)
-        m, k = suggest_sizing(capacity, fpr)
-        self.filter = BloomFilter(m, k)
         self.sink = sink
         self.seed = seed
         self.state_dir = state_dir
-        self.last_epoch = -1
-        self.rows_in = 0
-        self.rows_emitted = 0
-        if state_dir:
-            os.makedirs(state_dir, exist_ok=True)
-            self._restore()
+        self.last_epoch, self.rows_in, self.rows_emitted = -1, 0, 0
+        self._file = _EpochFile(state_dir, self._STATE_FILE) if state_dir else None
+        saved = self._file.read(3) if self._file else None
+        if not saved:
+            return state
+        (self.last_epoch, self.rows_in, self.rows_emitted), blob = saved
+        return type(state).from_bytes(blob)
 
-    def _state_path(self) -> str:
-        return os.path.join(self.state_dir, "dedup_state.bin")
+    def _state(self) -> BloomFilter:
+        return self.filter
 
-    def _restore(self) -> None:
-        path = self._state_path()
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                raw = fh.read()
-            self.last_epoch = int.from_bytes(raw[:8], "little", signed=True)
-            self.rows_in = int.from_bytes(raw[8:16], "little")
-            self.rows_emitted = int.from_bytes(raw[16:24], "little")
-            self.filter = BloomFilter.from_bytes(raw[24:])
+    def _partial(self, fresh: DataFrame, like: BloomFilter) -> BloomFilter:
+        """One distributed build of ``fresh`` keys at ``like``'s geometry."""
+        return build_sketch(
+            fresh, self.cols,
+            lambda: BloomFilter(like.num_bits, like.num_hashes, like.variant),
+            seed=self.seed)
 
-    def _persist(self) -> None:
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(self.last_epoch.to_bytes(8, "little", signed=True))
-            fh.write(self.rows_in.to_bytes(8, "little"))
-            fh.write(self.rows_emitted.to_bytes(8, "little"))
-            fh.write(self.filter.to_bytes())
-        os.replace(tmp, self._state_path())
+    def _fresh(self, keyed: DataFrame) -> DataFrame:
+        seen = with_membership(keyed, self._state(), self.cols, "__seen",
+                               seed=self.seed)
+        return seen.where(~F.col("__seen")).drop("__seen")
 
-    def _emit(self, df: DataFrame, epoch_id: int) -> None:
-        if self.sink is None:
-            return
-        if isinstance(self.sink, str):
-            df.write.mode("append").parquet(self.sink)
-        else:
-            self.sink(df, epoch_id)
+    def _insert(self, fresh: DataFrame, n_fresh: int) -> None:
+        self.filter.merge(self._partial(fresh, self.filter))
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id <= self.last_epoch:
@@ -106,34 +105,30 @@ class BloomDedupStream:
         # (dedup+probe pipeline, null pass-through, rows_in metric) read the
         # cache, not the source — an expensive upstream transform runs once
         batch_df = batch_df.persist()
-        keyed = batch_df.where(key_ok).dropDuplicates(self.cols)
-        nulls = batch_df.where(~key_ok)  # pass-through, never inserted
-        seen = with_membership(keyed, self.filter, self.cols, "__seen",
-                               seed=self.seed)
-        fresh = seen.where(~F.col("__seen")).drop("__seen")
+        fresh = self._fresh(batch_df.where(key_ok).dropDuplicates(self.cols))
         fresh = fresh.persist()
         try:
             n_fresh = fresh.count()
-            self._emit(fresh.unionByName(nulls), epoch_id)
+            # NULL-keyed rows pass through, never inserted
+            out = fresh.unionByName(batch_df.where(~key_ok))
+            if isinstance(self.sink, str):
+                out.write.mode("append").parquet(self.sink)
+            elif self.sink is not None:
+                self.sink(out, epoch_id)
             if n_fresh:
-                part = build_sketch(
-                    fresh, self.cols,
-                    lambda: BloomFilter(self.filter.num_bits,
-                                        self.filter.num_hashes,
-                                        self.filter.variant),
-                    seed=self.seed)
-                self.filter.merge(part)
+                self._insert(fresh, n_fresh)
             self.rows_in += batch_df.count()
             self.rows_emitted += n_fresh
         finally:
             fresh.unpersist()
             batch_df.unpersist()
         self.last_epoch = epoch_id
-        if self.state_dir:
-            self._persist()
+        if self._file:
+            self._file.write([self.last_epoch, self.rows_in, self.rows_emitted],
+                             self._state().to_bytes())
 
 
-class ScalableBloomDedupStream:
+class ScalableBloomDedupStream(BloomDedupStream):
     """`BloomDedupStream` without the capacity guess: state is a
     ScalableBloomFilter (Almeida et al. 2007 — the design the reference
     only sketches at Scalable/Mutable.hs:10-14) whose levels grow by the
@@ -158,103 +153,39 @@ class ScalableBloomDedupStream:
     ``initial_capacity`` at or above the expected batch size to keep
     levels near schedule.
 
-    Epoch handling, NULL pass-through, and sink semantics are identical
-    to BloomDedupStream (state + last epoch persist atomically; replayed
+    Epoch handling, NULL pass-through, and sink semantics are those of
+    BloomDedupStream (state + last epoch persist atomically; replayed
     epochs are skipped)."""
+
+    _STATE_FILE = "scalable_dedup_state.bin"
 
     def __init__(self, cols, err_rate: float = 0.01,
                  initial_capacity: int = 100_000, tightening: float = 0.5,
                  sink: Callable[[DataFrame, int], None] | str | None = None,
                  seed: int = DEFAULT_SEED, state_dir: str | None = None):
-        from ..sketches.scalable import ScalableBloomFilter
-        self.cols = [cols] if isinstance(cols, str) else list(cols)
-        self.sbf = ScalableBloomFilter(err_rate, initial_capacity, tightening)
-        self.sink = sink
-        self.seed = seed
-        self.state_dir = state_dir
-        self.last_epoch = -1
-        self.rows_in = 0
-        self.rows_emitted = 0
-        if state_dir:
-            os.makedirs(state_dir, exist_ok=True)
-            self._restore()
+        self.sbf = self._open(
+            cols, ScalableBloomFilter(err_rate, initial_capacity, tightening),
+            sink, seed, state_dir)
 
-    def _state_path(self) -> str:
-        return os.path.join(self.state_dir, "scalable_dedup_state.bin")
-
-    def _restore(self) -> None:
-        from ..sketches.scalable import ScalableBloomFilter
-        path = self._state_path()
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                raw = fh.read()
-            self.last_epoch = int.from_bytes(raw[:8], "little", signed=True)
-            self.rows_in = int.from_bytes(raw[8:16], "little")
-            self.rows_emitted = int.from_bytes(raw[16:24], "little")
-            self.sbf = ScalableBloomFilter.from_bytes(raw[24:])
-
-    def _persist(self) -> None:
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(self.last_epoch.to_bytes(8, "little", signed=True))
-            fh.write(self.rows_in.to_bytes(8, "little"))
-            fh.write(self.rows_emitted.to_bytes(8, "little"))
-            fh.write(self.sbf.to_bytes())
-        os.replace(tmp, self._state_path())
+    def _state(self) -> ScalableBloomFilter:
+        return self.sbf
 
     def compound_bound(self) -> float:
         """Honest union bound over levels from ACTUAL fill (see class
         docstring); <= err_rate/(1-tightening) whenever no level overshot."""
-        from ..sizing import analytic_fpr
         return sum(analytic_fpr(f.num_bits, f.num_hashes, cnt)
                    for f, cnt in zip(self.sbf.filters, self.sbf.counts))
 
-    def _emit(self, df: DataFrame, epoch_id: int) -> None:
-        if self.sink is None:
-            return
-        if isinstance(self.sink, str):
-            df.write.mode("append").parquet(self.sink)
-        else:
-            self.sink(df, epoch_id)
+    def _fresh(self, keyed: DataFrame) -> DataFrame:
+        # nothing inserted yet: everything is fresh
+        return super()._fresh(keyed) if self.sbf.filters else keyed
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= self.last_epoch:
-            return  # replayed epoch after restart: state already reflects it
-        key_ok = F.lit(True)
-        for c in self.cols:
-            key_ok = key_ok & F.col(c).isNotNull()
-        batch_df = batch_df.persist()
-        keyed = batch_df.where(key_ok).dropDuplicates(self.cols)
-        nulls = batch_df.where(~key_ok)  # pass-through, never inserted
-        if self.sbf.filters:
-            seen = with_membership(keyed, self.sbf, self.cols, "__seen",
-                                   seed=self.seed)
-            fresh = seen.where(~F.col("__seen")).drop("__seen")
-        else:
-            fresh = keyed  # nothing inserted yet: everything is fresh
-        fresh = fresh.persist()
-        try:
-            n_fresh = fresh.count()
-            self._emit(fresh.unionByName(nulls), epoch_id)
-            if n_fresh:
-                # grow BEFORE insert when the current level is at capacity
-                # (the kernel's update() growth rule at batch granularity)
-                if (not self.sbf.filters
-                        or self.sbf.counts[-1] >= self.sbf.capacities[-1]):
-                    self.sbf._grow()
-                lvl = self.sbf.filters[-1]
-                part = build_sketch(
-                    fresh, self.cols,
-                    lambda: BloomFilter(lvl.num_bits, lvl.num_hashes,
-                                        lvl.variant),
-                    seed=self.seed)
-                lvl.merge(part)
-                self.sbf.counts[-1] += n_fresh
-            self.rows_in += batch_df.count()
-            self.rows_emitted += n_fresh
-        finally:
-            fresh.unpersist()
-            batch_df.unpersist()
-        self.last_epoch = epoch_id
-        if self.state_dir:
-            self._persist()
+    def _insert(self, fresh: DataFrame, n_fresh: int) -> None:
+        # grow BEFORE insert when the current level is at capacity (the
+        # kernel's update() growth rule at batch granularity), then OR the
+        # batch's partial into the last level
+        if not self.sbf.filters or self.sbf.counts[-1] >= self.sbf.capacities[-1]:
+            self.sbf._grow()
+        level = self.sbf.filters[-1]
+        level.merge(self._partial(fresh, level))
+        self.sbf.counts[-1] += n_fresh

@@ -363,6 +363,9 @@ def test_streaming_stateful_quantile_with_ddsketch_factory(spark, tmp_path,
 
     rows = [("t0" if i % 3 else "t1", float(np.exp(x)))
             for i, x in enumerate(rng.standard_normal(4_000))]
+    # DDSketch skips ±inf, so n_updates must not count these rows
+    rows += [("t0", float("inf")), ("t1", float("-inf")),
+             ("t1", float("inf"))]
     df = spark.createDataFrame(rows, "tool string, lat double")
     src = str(tmp_path / "dd_src")
     df.repartition(3).write.parquet(src)
