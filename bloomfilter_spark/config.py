@@ -79,6 +79,40 @@ def has_iceberg(spark) -> bool:
         return False
 
 
+# Top-level module next to the package (see its docstring): the Python
+# worker daemon of get_spark sessions.
+WORKER_DAEMON = "bloomfilter_spark_daemon"
+
+
+def worker_daemon_module() -> str | None:
+    """WORKER_DAEMON when Python workers can import it from a plain
+    directory, else None (e.g. the library loaded from a --py-files zip).
+
+    Local-mode workers search the JVM's working directory and PYTHONPATH,
+    so the module's directory must be one of those. A running gateway (it
+    outlives stopped contexts) is asked for its own; otherwise the JVM about
+    to start inherits this process's.
+    """
+    from pyspark import SparkContext
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isfile(os.path.join(root, WORKER_DAEMON + ".py")):
+        return None
+    jvm = SparkContext._jvm
+    if jvm is None:
+        cwd, env = os.getcwd(), os.environ
+    else:
+        system = jvm.java.lang.System
+        cwd, env = system.getProperty("user.dir"), system.getenv()
+    dirs = (env.get("PYTHONPATH") or "").split(os.pathsep)
+    if not env.get("PYTHONSAFEPATH"):  # `python -m` puts the cwd first
+        dirs.append(cwd)
+    real = os.path.realpath(root)
+    if any(d and os.path.realpath(d) == real for d in dirs):
+        return WORKER_DAEMON
+    return None
+
+
 def get_spark(app_name: str = "bloomfilter_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               iceberg_warehouse: str | None = None):
@@ -117,6 +151,9 @@ def get_spark(app_name: str = "bloomfilter_spark", cores: int | None = None,
         # default), which governs before the record cap for big payloads.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
     )
+    daemon = worker_daemon_module()
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
     iceberg_warehouse = iceberg_warehouse or os.environ.get(
         "SPARK_GRAFT_ICEBERG_WAREHOUSE")
     if iceberg_warehouse:

@@ -54,13 +54,18 @@ _MIN64 = -(1 << 63)
 
 @contextmanager
 def _wrap_arithmetic(spark):
-    """Scoped mod-2^64 wrap semantics for hash arithmetic (see module doc)."""
-    prev = spark.conf.get("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    """Scoped mod-2^64 wrap semantics for hash arithmetic (see module doc).
+    Restores the key exactly: unset again if it was unset on entry."""
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, "false")
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _signed(c: int) -> int:

@@ -116,6 +116,24 @@ def test_ansi_mode_restored_after_jvm_build(spark, lineitem):
     assert spark.conf.get("spark.sql.ansi.enabled") == prev
 
 
+def test_jvm_build_leaves_session_conf_unchanged(spark, events):
+    """An unset ANSI key stays unset: the wrap-arithmetic window must not
+    leave it explicitly set to the value `get` reported."""
+    from bloomfilter_spark.jvm_build import cms_grouped_build_jvm
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try:
+        before = dict(spark.conf.getAll)
+        assert key not in before
+        cms_grouped_build_jvm(events, ["event_type"], ["user_id"],
+                              width=256, depth=3).collect()
+        assert dict(spark.conf.getAll) == before
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+
+
 def test_hll_grouped_estimate_jvm_matches_kernel(spark, events, lineitem):
     """Per-key JVM estimates equal per-key kernel-HLL estimates exactly
     (same hash, same registers; the SQL harmonic sum is float-associative
