@@ -8,6 +8,10 @@ partial-aggregate model (SURVEY.md §1.4, §3.1):
   per partition -> two-level (treeAggregate-style) merge of serialized
   partials -> final sketch (driver object or 1-row DataFrame).
 
+multi_sketch_build skips the executor merge while partials x dense state
+is at most 64 MB: its own collect() returns the partials (one stage, no
+shuffle) and the driver folds them in partition order.
+
 All per-row work is columnar: hashing happens JVM-side via
 ``F.xxhash64`` (whole-stage codegen), kernels consume numpy arrays from
 Arrow batches. No per-row Python (BASELINE.json input_hint).
@@ -30,6 +34,11 @@ from .sketches.base import Sketch
 from .util import U64, to_u64
 
 SKETCH_SCHEMA = "sketch binary"
+
+# Most dense partial state (partials x state bytes) multi_sketch_build
+# folds on the driver: far below the default spark.driver.maxResultSize
+# (1 GB); P = 10^5 multi-MB partials still take the executor tree merge.
+_DRIVER_FOLD_BYTES = 64 << 20
 
 # per-executor cache of deserialized broadcast sketches (avoids re-parsing
 # the sketch for every Arrow batch). Keyed by an explicit unique token that
@@ -113,18 +122,25 @@ def build_partials(prepped: DataFrame, factory: Callable[[], Sketch]) -> DataFra
     §1.4). Empty partitions yield the zero sketch (merge identity)."""
     def fn(it: Iterable[pd.DataFrame]):
         sk = factory()
-        weighted = False
         for pdf in it:
             v = _batch_values(pdf, sk.HASH_KEYED)
             if "__w" in pdf.columns:
                 sk.update(v, pdf["__w"].to_numpy())
-                weighted = True
             else:
                 sk.update(v)
-        del weighted
         yield pd.DataFrame({"sketch": [sk.to_bytes()]})
 
     return prepped.mapInPandas(fn, schema=SKETCH_SCHEMA)
+
+
+def _fold(cls: type[Sketch], bufs: Iterable) -> Sketch | None:
+    """Merge serialized sketches of one class, in the given order (None
+    when there are none)."""
+    sk = None
+    for buf in bufs:
+        s = cls.from_bytes(bytes(buf))
+        sk = s if sk is None else sk.merge(s)
+    return sk
 
 
 def merge_partials_df(partials: DataFrame, factory: Callable[[], Sketch],
@@ -134,16 +150,20 @@ def merge_partials_df(partials: DataFrame, factory: Callable[[], Sketch],
     cls = type(factory())
 
     def fn(it: Iterable[pd.DataFrame]):
-        sk = None
-        for pdf in it:
-            for buf in pdf["sketch"]:
-                s = cls.from_bytes(bytes(buf))
-                sk = s if sk is None else sk.merge(s)
+        sk = _fold(cls, (buf for pdf in it for buf in pdf["sketch"]))
         if sk is None:
             sk = factory()
         yield pd.DataFrame({"sketch": [sk.to_bytes()]})
 
     return partials.repartition(num_partitions).mapInPandas(fn, schema=SKETCH_SCHEMA)
+
+
+def _needs_level1(num_partials: int, merge_partitions: int) -> bool:
+    """Whether a merge tree over ``num_partials`` partials gets its
+    intermediate ``merge_partitions``-task level: only beyond 4x that fan-in.
+    Below it each level-1 task holds about one partial, so the level is a
+    shuffle + stage that merges nothing."""
+    return num_partials > 4 * merge_partitions
 
 
 def _bloom_chunked_sketch_df(prepped: DataFrame, factory: Callable[[], Sketch],
@@ -239,7 +259,7 @@ def sketch_df(df: DataFrame, cols, factory: Callable[[], Sketch],
             return _bloom_chunked_sketch_df(prepped, factory, proto)
     partials = build_partials(prepped, factory)
     if two_level == "auto":
-        two_level = prepped.rdd.getNumPartitions() > 4 * merge_partitions
+        two_level = _needs_level1(prepped.rdd.getNumPartitions(), merge_partitions)
     if two_level:
         partials = merge_partials_df(partials, factory, merge_partitions)
     return merge_partials_df(partials, factory, 1)
@@ -287,6 +307,15 @@ def multi_sketch_build(df: DataFrame, specs: dict[str, tuple],
     NULL long must never reach pandas, where it would become lossy
     float64. Worst case the pipe carries specs + 1 columns (previously
     2x specs), best case just specs.
+
+    Merge: with P partitions, while P x the specs' summed dense state is
+    at most 64 MB (``_DRIVER_FOLD_BYTES``) the P x len(specs) partial rows
+    come back in this call's own ``collect()`` and fold on the driver in
+    partition order — one Spark stage, no shuffle, and a fold order (so
+    KLL bytes) fixed from run to run. Above it the partials merge on
+    executors, per name, through ``merge_partitions`` level-1 tasks when P
+    exceeds 4x that fan-in, so one row per name reaches the driver. Both
+    paths give the same Bloom/HLL/CMS bytes (OR, max and add commute).
     """
     names = list(specs)
     protos = {n: specs[n][1]() for n in names}
@@ -354,41 +383,36 @@ def multi_sketch_build(df: DataFrame, specs: dict[str, tuple],
                             "sketch": [sks[n].to_bytes() for n in names]})
 
     parts = prepped.mapInPandas(partials, schema="name string, sketch binary")
+    cls_of = {n: type(protos[n]) for n in names}
+    # the driver fold collects the same RDD it counts partitions on: an
+    # input ending in an exchange runs that map stage once, not twice
+    parts_rdd = parts.rdd
+    n_parts = parts_rdd.getNumPartitions()
+    if n_parts * sum(p.state_nbytes for p in protos.values()) <= _DRIVER_FOLD_BYTES:
+        # rows arrive in partition order, so the fold order (and with it
+        # KLL's compaction, which depends on merge order) is fixed
+        rows = parts_rdd.collect()
+    else:
+        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+            name = pdf["name"].iloc[0]
+            sk = _fold(cls_of[name], pdf["sketch"])
+            return pd.DataFrame({"name": [name], "sketch": [sk.to_bytes()]})
 
-    def _merged(pdf: pd.DataFrame) -> Sketch:
-        cls = type(factories[pdf["name"].iloc[0]]())
-        sk = None
-        for buf in pdf["sketch"]:
-            s = cls.from_bytes(bytes(buf))
-            sk = s if sk is None else sk.merge(s)
-        return sk
-
-    def merge_level1(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"name": [pdf["name"].iloc[0]],
-                             "__m": [pdf["__m"].iloc[0]],
-                             "sketch": [_merged(pdf).to_bytes()]})
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"name": [pdf["name"].iloc[0]],
-                             "sketch": [_merged(pdf).to_bytes()]})
-
-    # two-level (treeAggregate-style) merge: P partials per name first
-    # reduce in `merge_partitions` parallel tasks (salted by the emitting
-    # partition id), so the final per-name task deserializes
-    # <= merge_partitions partials instead of P — at P=100k scan splits a
-    # big-state Bloom would otherwise fan into one O(state x P) task.
-    lvl1 = (parts.withColumn("__m", F.spark_partition_id() % merge_partitions)
-                 .groupBy("name", "__m")
-                 .applyInPandas(merge_level1,
-                                schema="name string, __m int, sketch binary"))
-    final = lvl1.groupBy("name").applyInPandas(
-        merge_group, schema="name string, sketch binary").collect()
+        # two-level (treeAggregate-style) merge: P partials per name first
+        # reduce in `merge_partitions` parallel tasks (salted by the
+        # emitting partition id), so the final per-name task deserializes
+        # <= merge_partitions partials instead of P — at P=100k scan splits
+        # a big-state Bloom would otherwise fan into one O(state x P) task
+        if _needs_level1(n_parts, merge_partitions):
+            parts = (parts.withColumn("__m", F.spark_partition_id() % merge_partitions)
+                          .groupBy("name", "__m")
+                          .applyInPandas(merge, schema="name string, sketch binary"))
+        rows = parts.groupBy("name").applyInPandas(
+            merge, schema="name string, sketch binary").collect()
     out: dict[str, Sketch] = {}
-    for r in final:
-        cls = type(factories[r["name"]]())
-        out[r["name"]] = cls.from_bytes(bytes(r["sketch"]))
     for n in names:  # empty input: every spec still yields its zero sketch
-        out.setdefault(n, factories[n]())
+        bufs = [r["sketch"] for r in rows if r["name"] == n]
+        out[n] = _fold(cls_of[n], bufs) if bufs else factories[n]()
     return out
 
 
@@ -484,10 +508,7 @@ def merge_grouped_sketches(sketch_table: DataFrame, keys: Sequence[str],
     out_schema = T.StructType(key_fields + [T.StructField("sketch", T.BinaryType())])
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = None
-        for buf in pdf["sketch"]:
-            s = cls.from_bytes(bytes(buf))
-            sk = s if sk is None else sk.merge(s)
+        sk = _fold(cls, pdf["sketch"])
         row = {k: [pdf[k].iloc[0]] for k in keys}
         row["sketch"] = [sk.to_bytes()]
         return pd.DataFrame(row)
