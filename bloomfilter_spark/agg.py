@@ -143,12 +143,10 @@ def _fold(cls: type[Sketch], bufs: Iterable) -> Sketch | None:
     return sk
 
 
-def merge_partials_df(partials: DataFrame, factory: Callable[[], Sketch],
-                      num_partitions: int) -> DataFrame:
+def merge_partials_df(partials: DataFrame, cls: type[Sketch],
+                      factory: Callable[[], Sketch], num_partitions: int) -> DataFrame:
     """One merge level: shuffle partial rows into `num_partitions` tasks and
-    OR/max/add-merge within each."""
-    cls = type(factory())
-
+    OR/max/add-merge within each (``factory`` runs only for empty input)."""
     def fn(it: Iterable[pd.DataFrame]):
         sk = _fold(cls, (buf for pdf in it for buf in pdf["sketch"]))
         if sk is None:
@@ -231,7 +229,14 @@ def sketch_df(df: DataFrame, cols, factory: Callable[[], Sketch],
     ``two_level="auto"`` inserts the intermediate level only when the
     partial count is large enough to need it (> 4x merge_partitions);
     for small inputs the extra shuffle+stage is pure latency."""
-    proto = factory()
+    return _sketch_plan(df, cols, factory, factory(), seed, weight_col,
+                        merge_partitions, two_level, prehashed)
+
+
+def _sketch_plan(df: DataFrame, cols, factory: Callable[[], Sketch], proto: Sketch,
+                 seed: int, weight_col, merge_partitions: int,
+                 two_level: bool | str, prehashed: bool) -> DataFrame:
+    """sketch_df's plan, given the driver's one prototype sketch."""
     prepped = prepare_input(df, cols, proto, seed, weight_col, prehashed)
     # Large-state sketches (bloom with big m, CMS): every partial costs
     # O(state) bytes through Arrow + shuffle, and scan-split counts grow
@@ -261,8 +266,8 @@ def sketch_df(df: DataFrame, cols, factory: Callable[[], Sketch],
     if two_level == "auto":
         two_level = _needs_level1(prepped.rdd.getNumPartitions(), merge_partitions)
     if two_level:
-        partials = merge_partials_df(partials, factory, merge_partitions)
-    return merge_partials_df(partials, factory, 1)
+        partials = merge_partials_df(partials, type(proto), factory, merge_partitions)
+    return merge_partials_df(partials, type(proto), factory, 1)
 
 
 def build_sketch(df: DataFrame, cols, factory: Callable[[], Sketch],
@@ -271,11 +276,10 @@ def build_sketch(df: DataFrame, cols, factory: Callable[[], Sketch],
                  two_level: bool | str = "auto", prehashed: bool = False) -> Sketch:
     """Eager build: run the plan and return the merged Sketch object.
     Collects exactly one serialized sketch row (see sketch_df)."""
-    row = sketch_df(df, cols, factory, seed, weight_col,
-                    merge_partitions, two_level, prehashed).collect()
-    final = factory()
-    final.merge(type(final).from_bytes(bytes(row[0]["sketch"])))
-    return final
+    proto = factory()
+    row = _sketch_plan(df, cols, factory, proto, seed, weight_col,
+                       merge_partitions, two_level, prehashed).collect()
+    return type(proto).from_bytes(bytes(row[0]["sketch"]))
 
 
 def merge_sketches(sketches: Sequence[Sketch], factory: Callable[[], Sketch]) -> Sketch:
@@ -568,63 +572,139 @@ def _cached_sketch(bc, cls) -> Sketch:
     return sk
 
 
+# Largest driver-local input, in rows, that the read operators answer on
+# the driver (see _driver_local): the crossover with the UDF path. Spark
+# evaluates the folded lookup per row over up to N literals, so the local
+# path grows as N^2 while the UDF path stays near flat. Measured with
+# tools/probe_latency.py (4-core host, get_spark(cores=4), all-distinct
+# 2-column keys, p50 ms local vs UDF): with_membership 93 vs 231 at 20
+# rows, 124 vs 155 at 2,500, 162 vs 156 at 4,000, 479 vs 194 at 10,000;
+# with_cms_count (one IN list per distinct count) 127 vs 135 at 2,500
+# and 147 vs 145 at 3,000. The bound is the last size where both win.
+_LOCAL_PROBE_ROWS = 2500
+
+# the local path's temporary key-hash column, dropped before return
+_PROBE_HASH = "__bfs_probe_hash"
+
+
+def _driver_local(df: DataFrame) -> bool:
+    """Whether ``df`` is a small driver-local input: not streaming, every
+    leaf of its analyzed plan a LocalRelation (what ``createDataFrame`` of
+    a pandas frame or an Arrow table gives), and its optimized plan one
+    LocalRelation of at most ``_LOCAL_PROBE_ROWS`` rows. Reads plans only:
+    no Spark job, and no optimizer pass over a plan that reads a source."""
+    if df.isStreaming:
+        return False
+    qe = df._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    if any(leaves.apply(i).getClass().getSimpleName() != "LocalRelation"
+           for i in range(leaves.size())):
+        return False
+    plan = qe.optimizedPlan()
+    return (plan.getClass().getSimpleName() == "LocalRelation"
+            and plan.maxRows().get() <= _LOCAL_PROBE_ROWS)
+
+
+def _lookup(hashes: np.ndarray, answers: np.ndarray) -> Column:
+    """JVM-only lookup of each row's answer by its ``_PROBE_HASH``: a CASE
+    with one ``IN`` list per distinct answer but the most common one,
+    which a final branch gives every other row. That branch tests the
+    (never NULL) hash, not ``true`` and not ELSE, so the column stays
+    nullable like the UDF's. SQL text carries all the literals in one
+    py4j call instead of one per value."""
+    if not answers.size:
+        return F.lit(None).cast("boolean" if answers.dtype == np.bool_ else "long")
+    vals, inv, counts = np.unique(answers, return_inverse=True, return_counts=True)
+    groups = np.split(hashes[np.argsort(inv, kind="stable")], np.cumsum(counts)[:-1])
+    mode = int(counts.argmax())
+
+    def sql(v) -> str:
+        return str(v).lower() if isinstance(v, bool) else f"{v}L"
+
+    whens = [f"WHEN {_PROBE_HASH} IN ({','.join(map(sql, g.tolist()))}) THEN {sql(v)}"
+             for i, (v, g) in enumerate(zip(vals.tolist(), groups)) if i != mode]
+    return F.expr(f"CASE {' '.join(whens)} WHEN {_PROBE_HASH} IS NOT NULL "
+                  f"THEN {sql(vals[mode].item())} END")
+
+
+def _with_answers(df: DataFrame, sketch: Sketch, cols, seed: int, method: str,
+                  dtype: str, attach: Callable[[DataFrame, Column], DataFrame]
+                  ) -> DataFrame:
+    """Shared dispatch of the read operators: ``attach(frame, answer)``
+    adds the operator's columns, where ``answer`` is ``sketch.<method>``
+    (vectorized over uint64 hashes, result of Spark type ``dtype``) of
+    each row's ``hash_col(cols, seed)``.
+
+    A small driver-local input (``_driver_local``) is answered on the
+    driver: its distinct key hashes are collected (Spark folds the
+    projection into the LocalRelation, so no job runs), ``method`` runs
+    once over them, and the answers come back as a literal lookup keyed
+    on the same hash expression, which Spark again folds on the driver.
+    Any other input gets a broadcast of the sketch and a pandas UDF. Both
+    paths read the sketch at call time: a later ``update`` does not
+    change the returned frame's answers."""
+    h = hash_col(_cols(cols), seed)
+    if _driver_local(df):
+        rows = df.select(h).collect()
+        hashes = np.unique(np.fromiter((r[0] for r in rows), np.int64, len(rows)))
+        answers = getattr(sketch, method)(to_u64(hashes))
+        return attach(df.withColumn(_PROBE_HASH, h),
+                      _lookup(hashes, answers)).drop(_PROBE_HASH)
+    cls = type(sketch)
+    bc = _broadcast_sketch(df, sketch)
+
+    @F.pandas_udf(dtype)
+    def answer(v: pd.Series) -> pd.Series:
+        sk = _cached_sketch(bc, cls)
+        return pd.Series(getattr(sk, method)(to_u64(v.to_numpy())))
+
+    return attach(df, answer(h))
+
+
 def with_membership(df: DataFrame, bloom, cols, out_col: str = "is_member",
                     seed: int = DEFAULT_SEED) -> DataFrame:
-    """Broadcast-sketch membership column (elem equivalent, §3.2): probe
-    hashes computed JVM-side, bit tests vectorized per Arrow batch.
+    """Membership column (elem equivalent, §3.2): probe hashes computed
+    JVM-side, bit tests vectorized per Arrow batch over a broadcast of
+    the sketch. A driver-local input of at most ``_LOCAL_PROBE_ROWS`` rows
+    (``createDataFrame`` of a pandas frame) is answered on the driver
+    instead, with no Spark job (``_with_answers``). Either way the answers
+    are those of the sketch as it is at call time.
 
     Accepts any hash-keyed sketch with a vectorized ``contains``
     (BloomFilter, ScalableBloomFilter — the latter ORs across its levels
     inside one probe)."""
-    cls = type(bloom)
-    bc = _broadcast_sketch(df, bloom)
-
-    @F.pandas_udf("boolean")
-    def contains(h: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc, cls)
-        return pd.Series(sk.contains(to_u64(h.to_numpy())))
-
     cs = _cols(cols)
     any_null = cs[0].isNull()
     for c in cs[1:]:
         any_null = any_null | c.isNull()
     # SQL semantics: membership of a NULL key is NULL, not a bit test on
     # the salt (deviation from the reference's Nothing-hashing, SURVEY §2.3)
-    member = F.when(any_null, F.lit(None).cast("boolean")) \
-              .otherwise(contains(hash_col(cs, seed)))
-    return df.withColumn(out_col, member)
+    return _with_answers(df, bloom, cs, seed, "contains", "boolean",
+                         lambda frame, hit: frame.withColumn(
+                             out_col, F.when(any_null, F.lit(None).cast("boolean"))
+                                       .otherwise(hit)))
 
 
 def with_cms_count(df: DataFrame, cms, cols, out_col: str = "est_count",
                    seed: int = DEFAULT_SEED) -> DataFrame:
-    """Broadcast-CMS point-frequency estimate column."""
-    from .sketches.cms import CountMinSketch
-
-    bc = _broadcast_sketch(df, cms)
-
-    @F.pandas_udf("long")
-    def est(h: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc, CountMinSketch)
-        return pd.Series(sk.query(to_u64(h.to_numpy())))
-
-    return df.withColumn(out_col, est(hash_col(_cols(cols), seed)))
+    """Point-frequency estimate column from a Count-Min sketch, broadcast
+    to a pandas UDF; a driver-local input of at most ``_LOCAL_PROBE_ROWS``
+    rows is answered on the driver with no Spark job (``_with_answers``).
+    Answers are those of the sketch as it is at call time."""
+    return _with_answers(df, cms, cols, seed, "query", "long",
+                         lambda frame, est: frame.withColumn(out_col, est))
 
 
 def with_mg_bounds(df: DataFrame, mg, cols, lo_col: str = "mg_lo",
                    hi_col: str = "mg_hi", seed: int = DEFAULT_SEED) -> DataFrame:
-    """Broadcast Misra–Gries two-sided frequency bounds: ``lo`` is the
-    stored count (never an overcount), ``hi = lo + dec`` (never an
-    undercount) — deterministic, no failure probability. The natural
-    complement of with_cms_count, whose estimate never undercounts."""
-    from .sketches.mg import MisraGries
-
-    bc = _broadcast_sketch(df, mg)
-
-    @F.pandas_udf("long")
-    def lo(h: pd.Series) -> pd.Series:
-        sk = _cached_sketch(bc, MisraGries)
-        return pd.Series(sk.query(to_u64(h.to_numpy())))
-
-    lo_expr = lo(hash_col(_cols(cols), seed))
-    return (df.withColumn(lo_col, lo_expr)
-              .withColumn(hi_col, F.col(lo_col) + F.lit(int(mg.dec))))
+    """Misra–Gries two-sided frequency bounds: ``lo`` is the stored count
+    (never an overcount), ``hi = lo + dec`` (never an undercount) —
+    deterministic, no failure probability. The natural complement of
+    with_cms_count, whose estimate never undercounts. Dispatched like
+    with_cms_count (broadcast UDF, or no Spark job for a driver-local
+    input of at most ``_LOCAL_PROBE_ROWS`` rows); both bounds are those of
+    the summary as it is at call time."""
+    dec = F.lit(int(mg.dec))
+    return _with_answers(df, mg, cols, seed, "query", "long",
+                         lambda frame, lo: frame.withColumn(lo_col, lo)
+                                                .withColumn(hi_col, F.col(lo_col) + dec))

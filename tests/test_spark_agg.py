@@ -227,3 +227,27 @@ def test_mg_vs_exact_counts(spark, documents):
         assert r["mg_lo"] <= r["cnt"] <= r["mg_hi"], r
         if r["cnt"] > mg.n / (k + 1):
             assert r["mg_lo"] > 0, r
+
+
+@pytest.mark.parametrize("family", ["bloom", "hll", "cms", "kll", "mg"])
+def test_build_sketch_allocates_one_driver_sketch(spark, lineitem, family):
+    """build_sketch makes one prototype on the driver and returns the
+    final row's sketch as is: the same bytes as merging that row into a
+    fresh zero sketch, without allocating and merging into one."""
+    from bloomfilter_spark.sketches import MisraGries
+    make = {"bloom": lambda: BloomFilter(1 << 16, 5), "hll": lambda: HyperLogLog(12),
+            "cms": lambda: CountMinSketch(width=1024, depth=4),
+            "kll": lambda: KLL(200), "mg": lambda: MisraGries(k=16)}[family]
+    cols = ["l_extendedprice"] if family == "kll" else ["l_orderkey"]
+    calls = []
+
+    def factory():
+        calls.append(1)  # executors append to their own copy of the list
+        return make()
+
+    got = build_sketch(lineitem, cols, factory)
+    assert len(calls) == 1
+    row = sketch_df(lineitem, cols, make).collect()[0]
+    want = make()
+    want.merge(type(want).from_bytes(bytes(row["sketch"])))
+    assert got.to_bytes() == want.to_bytes()
