@@ -5,12 +5,16 @@ unsafeFreeze, /root/reference/Data/BloomFilter.hs:123-131) as Spark's
 partial-aggregate model (SURVEY.md §1.4, §3.1):
 
   scan -> [JVM] xxhash64 hash column -> [Arrow] mapInPandas partial sketch
-  per partition -> two-level (treeAggregate-style) merge of serialized
-  partials -> final sketch (driver object or 1-row DataFrame).
+  per partition -> merge of serialized partials -> final sketch (driver
+  object or 1-row DataFrame).
 
-multi_sketch_build skips the executor merge while partials x dense state
-is at most 64 MB: its own collect() returns the partials (one stage, no
-shuffle) and the driver folds them in partition order.
+One core (_build) runs build_sketch, sketch_df and multi_sketch_build.
+An eager build skips the executor merge while partials x dense state is
+at most 64 MB: its own collect() returns the partials (one stage, no
+shuffle) and the driver folds them in partition order, so the driver's
+fan-in is bounded by that budget. Above it, and always for the lazy
+sketch_df, the partials merge on executors (treeAggregate-style: a
+level-1 merge only past 4x merge_partitions partials, then one task).
 
 All per-row work is columnar: hashing happens JVM-side via
 ``F.xxhash64`` (whole-stage codegen), kernels consume numpy arrays from
@@ -33,9 +37,10 @@ from .config import DEFAULT_MERGE_PARTITIONS, DEFAULT_SEED
 from .sketches.base import Sketch
 from .util import U64, to_u64
 
-SKETCH_SCHEMA = "sketch binary"
+# rows of the build's partial and merge stages: one serialized sketch per spec
+SKETCH_SCHEMA = "name string, sketch binary"
 
-# Most dense partial state (partials x state bytes) multi_sketch_build
+# Most dense partial state (partials x state bytes) an eager build
 # folds on the driver: far below the default spark.driver.maxResultSize
 # (1 GB); P = 10^5 multi-MB partials still take the executor tree merge.
 _DRIVER_FOLD_BYTES = 64 << 20
@@ -117,22 +122,6 @@ def _batch_values(pdf: pd.DataFrame, hash_keyed: bool) -> np.ndarray:
     return to_u64(v) if hash_keyed else np.asarray(v, dtype=np.float64)
 
 
-def build_partials(prepped: DataFrame, factory: Callable[[], Sketch]) -> DataFrame:
-    """One serialized partial sketch per input partition (the 'freeze' of
-    §1.4). Empty partitions yield the zero sketch (merge identity)."""
-    def fn(it: Iterable[pd.DataFrame]):
-        sk = factory()
-        for pdf in it:
-            v = _batch_values(pdf, sk.HASH_KEYED)
-            if "__w" in pdf.columns:
-                sk.update(v, pdf["__w"].to_numpy())
-            else:
-                sk.update(v)
-        yield pd.DataFrame({"sketch": [sk.to_bytes()]})
-
-    return prepped.mapInPandas(fn, schema=SKETCH_SCHEMA)
-
-
 def _fold(cls: type[Sketch], bufs: Iterable) -> Sketch | None:
     """Merge serialized sketches of one class, in the given order (None
     when there are none)."""
@@ -143,29 +132,50 @@ def _fold(cls: type[Sketch], bufs: Iterable) -> Sketch | None:
     return sk
 
 
-def merge_partials_df(partials: DataFrame, cls: type[Sketch],
-                      factory: Callable[[], Sketch], num_partitions: int) -> DataFrame:
-    """One merge level: shuffle partial rows into `num_partitions` tasks and
-    OR/max/add-merge within each (``factory`` runs only for empty input)."""
-    def fn(it: Iterable[pd.DataFrame]):
-        sk = _fold(cls, (buf for pdf in it for buf in pdf["sketch"]))
-        if sk is None:
-            sk = factory()
-        yield pd.DataFrame({"sketch": [sk.to_bytes()]})
+def _fold_named(cls_of: dict[str, type[Sketch]], pairs: Iterable,
+                factories: dict[str, Callable[[], Sketch]] | None = None
+                ) -> dict[str, Sketch]:
+    """Fold (name, serialized sketch) pairs per name, in the given order.
+    With ``factories``, every name gets a sketch: the zero sketch for one
+    that never arrived (empty input)."""
+    out: dict[str, Sketch] = {}
+    for name, buf in pairs:
+        s = cls_of[name].from_bytes(bytes(buf))
+        out[name] = out[name].merge(s) if name in out else s
+    for name, factory in (factories or {}).items():
+        if name not in out:
+            out[name] = factory()
+    return out
 
-    return partials.repartition(num_partitions).mapInPandas(fn, schema=SKETCH_SCHEMA)
+
+def _merge_level(parts: DataFrame, cls_of: dict[str, type[Sketch]], n: int,
+                 factories: dict[str, Callable[[], Sketch]] | None = None
+                 ) -> DataFrame:
+    """One executor merge level: shuffle the (name, sketch) rows into
+    ``n`` tasks, each folding every name it receives in arrival order.
+    The final level (n=1) passes ``factories`` so it emits every name."""
+    def fn(it: Iterable[pd.DataFrame]):
+        sks = _fold_named(cls_of, (p for pdf in it
+                                   for p in zip(pdf["name"], pdf["sketch"])),
+                          factories)
+        if sks:
+            yield pd.DataFrame({"name": list(sks),
+                                "sketch": [s.to_bytes() for s in sks.values()]})
+
+    return parts.repartition(n).mapInPandas(fn, schema=SKETCH_SCHEMA)
 
 
 def _needs_level1(num_partials: int, merge_partitions: int) -> bool:
-    """Whether a merge tree over ``num_partials`` partials gets its
+    """Whether an executor merge over ``num_partials`` partials gets its
     intermediate ``merge_partitions``-task level: only beyond 4x that fan-in.
     Below it each level-1 task holds about one partial, so the level is a
     shuffle + stage that merges nothing."""
     return num_partials > 4 * merge_partitions
 
 
-def _bloom_chunked_sketch_df(prepped: DataFrame, factory: Callable[[], Sketch],
-                             proto) -> DataFrame:
+def _bloom_chunked_sketch_df(prepped: DataFrame, name: str,
+                             fill: Callable[[Iterable[pd.DataFrame]], dict],
+                             factory: Callable[[], Sketch], proto) -> DataFrame:
     """Big-state Bloom merge with the OR parallelized by WORD RANGE.
 
     The generic merge ships every partial's whole state to ONE task
@@ -181,10 +191,7 @@ def _bloom_chunked_sketch_df(prepped: DataFrame, factory: Callable[[], Sketch],
     bounds = [n_words * c // n_chunks for c in range(n_chunks + 1)]
 
     def partials(it: Iterable[pd.DataFrame]):
-        sk = factory()
-        for pdf in it:
-            sk.update(_batch_values(pdf, True))
-        words = sk.words.astype("<u8", copy=False)
+        words = fill(it)[name].words.astype("<u8", copy=False)
         yield pd.DataFrame({
             "chunk": list(range(n_chunks)),
             "words": [words[bounds[c]:bounds[c + 1]].tobytes()
@@ -207,7 +214,7 @@ def _bloom_chunked_sketch_df(prepped: DataFrame, factory: Callable[[], Sketch],
             sk.words = np.frombuffer(
                 b"".join(chunks[c] for c in sorted(chunks)),
                 dtype="<u8").astype(U64)
-        yield pd.DataFrame({"sketch": [sk.to_bytes()]})
+        yield pd.DataFrame({"name": [name], "sketch": [sk.to_bytes()]})
 
     parts = prepped.mapInPandas(partials, schema="chunk int, words binary")
     ored = parts.groupBy("chunk").applyInPandas(
@@ -215,78 +222,163 @@ def _bloom_chunked_sketch_df(prepped: DataFrame, factory: Callable[[], Sketch],
     return ored.repartition(1).mapInPandas(assemble, schema=SKETCH_SCHEMA)
 
 
+def _build(df: DataFrame, specs: dict[str, tuple], seed: int,
+           merge_partitions: int, eager: bool = True):
+    """The one build core under build_sketch, sketch_df and
+    multi_sketch_build. ``specs``: {name: (cols, factory, weight_col,
+    prehashed)}. Returns {name: Sketch} when ``eager`` (merge paths: see
+    multi_sketch_build), else the lazy executor-merged (name, sketch)
+    frame, one row per name."""
+    names = list(specs)
+    factories = {n: specs[n][1] for n in names}
+    protos = {n: factories[n]() for n in names}
+    cls_of = {n: type(protos[n]) for n in names}
+    hash_keyed = {n: protos[n].HASH_KEYED for n in names}
+    fields = {f.name: f for f in df.schema.fields}
+    proj: list[Column] = []
+    weighted: set[str] = set()
+    # NULL keys skip only their own spec. One spec filters JVM-side, so
+    # skipped rows never cross the pipe. Several specs: value specs need
+    # no validity bit (a NULL double crosses Arrow as NaN and every value
+    # kernel drops NaN), and the nullable long specs share ONE packed
+    # bitmask column — a NULL long must never reach pandas, where it
+    # would become lossy float64
+    bit_of: dict[str, int] = {}
+    mask: Column | None = None
+    for n in names:
+        raw_cols, _, weight_col, prehashed = specs[n]
+        raw_cols = [raw_cols] if isinstance(raw_cols, (str, Column)) else list(raw_cols)
+        cs = _cols(raw_cols)
+        if prehashed:
+            if len(cs) != 1:
+                raise ValueError("prehashed input takes exactly one hash column")
+            v = cs[0].cast("long")
+        elif hash_keyed[n]:
+            v = hash_col(cs, seed)
+        else:
+            if len(cs) != 1:
+                raise ValueError("value sketches take exactly one column")
+            v = cs[0].cast("double")
+        # provably non-nullable named columns need no validity signal
+        # (schema-checked; Column expressions are conservatively nullable)
+        if not all(isinstance(c, str) and c in fields and not fields[c].nullable
+                   for c in raw_cols):
+            notnull = cs[0].isNotNull()
+            for c in cs[1:]:
+                notnull = notnull & c.isNotNull()
+            if len(names) == 1:
+                df = df.where(notnull)
+            elif prehashed or hash_keyed[n]:
+                if len(bit_of) > 62:
+                    raise ValueError(
+                        "multi_sketch_build packs spec validity into one "
+                        "long bitmask: at most 63 nullable hash specs")
+                bit = (F.when(notnull, F.lit(1 << len(bit_of)).cast("long"))
+                        .otherwise(F.lit(0)))
+                mask = bit if mask is None else mask.bitwiseOR(bit)
+                bit_of[n] = len(bit_of)
+                v = F.coalesce(v, F.lit(0).cast("long"))
+        proj.append(v.alias(f"__v_{n}"))
+        if weight_col is not None:
+            weighted.add(n)
+            proj.append(_cols(weight_col)[0].cast("double").alias(f"__w_{n}"))
+    if mask is not None:
+        proj.append(mask.alias("__mask"))
+    prepped = df.select(*proj)
+    full_mask = (1 << len(bit_of)) - 1
+
+    def fill(it: Iterable[pd.DataFrame]) -> dict[str, Sketch]:
+        sks = {n: factories[n]() for n in names}
+        for pdf in it:
+            m = pdf["__mask"].to_numpy() if full_mask else None
+            all_ok = m is None or bool((m == full_mask).all())
+            for n in names:
+                raw = pdf[f"__v_{n}"].to_numpy()
+                w = pdf[f"__w_{n}"].to_numpy() if n in weighted else None
+                if not all_ok and n in bit_of:
+                    keep = (m >> bit_of[n]) & 1 == 1
+                    raw = raw[keep]
+                    w = None if w is None else w[keep]
+                v = to_u64(raw) if hash_keyed[n] else np.asarray(raw, dtype=np.float64)
+                if w is None:
+                    sks[n].update(v)
+                else:
+                    sks[n].update(v, w)
+        return sks
+
+    state = sum(p.state_nbytes for p in protos.values())
+    final = None
+    # Large state: every partial costs O(state) bytes through Arrow +
+    # shuffle (or the driver collect) REGARDLESS of its row count, and
+    # scan-split counts grow with parallelism — so cap the partial count
+    # via a narrow coalesce. state_nbytes, not len(to_bytes()): the sparse
+    # wire format makes an empty large-m Bloom serialize to ~20 bytes, but
+    # each partial task still allocates and (worst case) ships the dense
+    # state. Measured on the 16 MB-state bench Bloom: 32 -> 16 partials
+    # took the whole build from ~5.5 s to ~3.9 s; 8 and 4 were flat from
+    # there, so scan parallelism is kept instead. Bound the fan-in to
+    # ~256 MB of partials, floored at p/4 tasks so a big cluster's scan
+    # still spreads.
+    if state > (4 << 20):
+        p = df.sparkSession.sparkContext.defaultParallelism
+        prepped = prepped.coalesce(max(p // 4, min(p, (256 << 20) // state), 1))
+        from .sketches.bloom import BloomFilter
+        if len(names) == 1 and cls_of[names[0]] is BloomFilter:
+            final = _bloom_chunked_sketch_df(prepped, names[0], fill,
+                                             factories[names[0]], protos[names[0]])
+    if final is None:
+        def partials(it: Iterable[pd.DataFrame]):
+            sks = fill(it)
+            yield pd.DataFrame({"name": names,
+                                "sketch": [sks[n].to_bytes() for n in names]})
+
+        parts = prepped.mapInPandas(partials, schema=SKETCH_SCHEMA)
+        # the driver fold collects the same RDD it counts partitions on: an
+        # input ending in an exchange runs that map stage once, not twice
+        parts_rdd = parts.rdd
+        n_parts = parts_rdd.getNumPartitions()
+        if eager and n_parts * state <= _DRIVER_FOLD_BYTES:
+            # rows arrive in partition order, so the fold order (and with
+            # it KLL's compaction, which depends on merge order) is fixed
+            return _fold_named(cls_of, ((r["name"], r["sketch"])
+                                        for r in parts_rdd.collect()), factories)
+        if _needs_level1(n_parts, merge_partitions):
+            parts = _merge_level(parts, cls_of, merge_partitions)
+        final = _merge_level(parts, cls_of, 1, factories)
+    if not eager:
+        return final
+    return _fold_named(cls_of, ((r["name"], r["sketch"]) for r in final.collect()),
+                       factories)
+
+
 def sketch_df(df: DataFrame, cols, factory: Callable[[], Sketch],
               seed: int = DEFAULT_SEED, weight_col=None,
-              merge_partitions: int = DEFAULT_MERGE_PARTITIONS,
-              two_level: bool | str = "auto", prehashed: bool = False) -> DataFrame:
+              prehashed: bool = False) -> DataFrame:
     """Fully in-plan build: returns a 1-row DataFrame with the final
-    serialized sketch. Lazy — composable inside larger query plans.
+    serialized sketch (the zero sketch over an empty input). Lazy —
+    composable inside larger query plans.
 
-    Topology: P partition partials -> `merge_partitions` parallel merge
-    tasks -> 1 final merge task. All merging happens on executors; the
-    caller (or driver) only ever receives ONE serialized sketch — at
-    P=100k partitions of multi-MB partials, driver fan-in stays O(1).
-    ``two_level="auto"`` inserts the intermediate level only when the
-    partial count is large enough to need it (> 4x merge_partitions);
-    for small inputs the extra shuffle+stage is pure latency."""
-    return _sketch_plan(df, cols, factory, factory(), seed, weight_col,
-                        merge_partitions, two_level, prehashed)
-
-
-def _sketch_plan(df: DataFrame, cols, factory: Callable[[], Sketch], proto: Sketch,
-                 seed: int, weight_col, merge_partitions: int,
-                 two_level: bool | str, prehashed: bool) -> DataFrame:
-    """sketch_df's plan, given the driver's one prototype sketch."""
-    prepped = prepare_input(df, cols, proto, seed, weight_col, prehashed)
-    # Large-state sketches (bloom with big m, CMS): every partial costs
-    # O(state) bytes through Arrow + shuffle, and scan-split counts grow
-    # with parallelism — so cap the partial count at the core count via a
-    # narrow coalesce. Small-state sketches keep the scan's partitioning.
-    # state_nbytes, not len(to_bytes()): the sparse wire format makes an
-    # empty large-m Bloom serialize to ~20 bytes, but each partial task
-    # still allocates and (worst case) ships the dense state
-    partial_bytes = proto.state_nbytes
-    if partial_bytes > (4 << 20):
-        p = df.sparkSession.sparkContext.defaultParallelism
-        # Each partial ships O(state) bytes REGARDLESS of its row count,
-        # so the merge stage's input is partial_count * state — fewer,
-        # bigger build tasks cut it linearly (measured on the 16 MB-state
-        # bench bloom: 32 -> 16 partials took the whole build from ~5.5 s
-        # to ~3.9 s; 8 and 4 partials were flat from there, so scan
-        # parallelism is kept instead). Bound the fan-in to ~256 MB of
-        # partials, floored at p/4 tasks so a big cluster's scan still
-        # spreads; beyond 4x merge_partitions the two-level merge below
-        # takes over (unchanged).
-        target = max(p // 4, min(p, (256 << 20) // partial_bytes))
-        prepped = prepped.coalesce(max(target, 1))
-        from .sketches.bloom import BloomFilter
-        if type(proto) is BloomFilter:
-            return _bloom_chunked_sketch_df(prepped, factory, proto)
-    partials = build_partials(prepped, factory)
-    if two_level == "auto":
-        two_level = _needs_level1(prepped.rdd.getNumPartitions(), merge_partitions)
-    if two_level:
-        partials = merge_partials_df(partials, type(proto), factory, merge_partitions)
-    return merge_partials_df(partials, type(proto), factory, 1)
+    Topology: P partition partials -> [``DEFAULT_MERGE_PARTITIONS``
+    parallel merge tasks, only past 4x that fan-in] -> 1 final merge task,
+    all on executors (see ``_build``). The partial count is read when
+    this is called, so an input ending in an exchange runs that map stage
+    at that point (Spark plans it adaptively)."""
+    return _build(df, {"sketch": (cols, factory, weight_col, prehashed)}, seed,
+                  DEFAULT_MERGE_PARTITIONS, eager=False).select("sketch")
 
 
 def build_sketch(df: DataFrame, cols, factory: Callable[[], Sketch],
                  seed: int = DEFAULT_SEED, weight_col=None,
-                 merge_partitions: int = DEFAULT_MERGE_PARTITIONS,
-                 two_level: bool | str = "auto", prehashed: bool = False) -> Sketch:
+                 prehashed: bool = False) -> Sketch:
     """Eager build: run the plan and return the merged Sketch object.
-    Collects exactly one serialized sketch row (see sketch_df)."""
-    proto = factory()
-    row = _sketch_plan(df, cols, factory, proto, seed, weight_col,
-                       merge_partitions, two_level, prehashed).collect()
-    return type(proto).from_bytes(bytes(row[0]["sketch"]))
 
-
-def merge_sketches(sketches: Sequence[Sketch], factory: Callable[[], Sketch]) -> Sketch:
-    out = factory()
-    for s in sketches:
-        out.merge(s)
-    return out
+    Small partial state folds on the driver from the build's own
+    collect (one stage, no shuffle); beyond ``_DRIVER_FOLD_BYTES`` of
+    partials the executors merge and one row reaches the driver, so the
+    driver's fan-in is bounded by that budget. A Bloom filter over 4 MB
+    of state ORs its partials by word range on executors instead."""
+    return _build(df, {"sketch": (cols, factory, weight_col, prehashed)}, seed,
+                  DEFAULT_MERGE_PARTITIONS)["sketch"]
 
 
 def multi_sketch_build(df: DataFrame, specs: dict[str, tuple],
@@ -307,117 +399,21 @@ def multi_sketch_build(df: DataFrame, specs: dict[str, tuple],
     value specs need no validity signal at all (a NULL double crosses
     Arrow as NaN and every value kernel drops NaN), hash specs over
     provably non-nullable named columns need none either, and the
-    remaining nullable hash specs share ONE packed bitmask column — a
-    NULL long must never reach pandas, where it would become lossy
-    float64. Worst case the pipe carries specs + 1 columns (previously
-    2x specs), best case just specs.
+    remaining nullable hash specs share ONE packed bitmask column. Worst
+    case the pipe carries specs + 1 columns, best case just specs.
 
     Merge: with P partitions, while P x the specs' summed dense state is
     at most 64 MB (``_DRIVER_FOLD_BYTES``) the P x len(specs) partial rows
     come back in this call's own ``collect()`` and fold on the driver in
     partition order — one Spark stage, no shuffle, and a fold order (so
     KLL bytes) fixed from run to run. Above it the partials merge on
-    executors, per name, through ``merge_partitions`` level-1 tasks when P
-    exceeds 4x that fan-in, so one row per name reaches the driver. Both
-    paths give the same Bloom/HLL/CMS bytes (OR, max and add commute).
+    executors, through ``merge_partitions`` level-1 tasks when P exceeds
+    4x that fan-in, so one row per name reaches the driver. Both paths
+    give the same Bloom/HLL/CMS bytes (OR, max and add commute).
     """
-    names = list(specs)
-    protos = {n: specs[n][1]() for n in names}
-    proj: list[Column] = []
-    mask: Column | None = None
-    bit_of: dict[str, int] = {}
-    next_bit = 0
-    for n in names:
-        raw_cols = specs[n][0]
-        raw_cols = [raw_cols] if isinstance(raw_cols, (str, Column)) else list(raw_cols)
-        cs = _cols(raw_cols)
-        if protos[n].HASH_KEYED:
-            v = hash_col(cs, seed)
-            # a hash over provably non-nullable named columns can never
-            # be NULL — no validity bit, no coalesce (schema-checked;
-            # Column expressions are conservatively treated nullable)
-            provably = all(isinstance(c, str) and not df.schema[c].nullable
-                           for c in raw_cols)
-            if not provably:
-                notnull = cs[0].isNotNull()
-                for c in cs[1:]:
-                    notnull = notnull & c.isNotNull()
-                if next_bit > 62:
-                    raise ValueError(
-                        "multi_sketch_build packs spec validity into one "
-                        "long bitmask: at most 63 nullable hash specs")
-                bit_of[n] = next_bit
-                bit = (F.when(notnull, F.lit(1 << next_bit).cast("long"))
-                        .otherwise(F.lit(0)))
-                mask = bit if mask is None else mask.bitwiseOR(bit)
-                next_bit += 1
-                v = F.coalesce(v, F.lit(0).cast("long"))
-        else:
-            if len(cs) != 1:
-                raise ValueError("value sketches take exactly one column")
-            # value sketches need NO validity bit: a NULL double crosses
-            # Arrow as NaN and every value kernel drops NaN — exactly the
-            # skip the old flag column implemented
-            v = cs[0].cast("double")
-        proj.append(v.alias(f"__v_{n}"))
-    if mask is not None:
-        proj.append(mask.alias("__mask"))
-    prepped = df.select(*proj)
-    factories = {n: specs[n][1] for n in names}
-    hash_keyed = {n: protos[n].HASH_KEYED for n in names}
-    full_mask = (1 << next_bit) - 1
-
-    def partials(it: Iterable[pd.DataFrame]):
-        sks = {n: factories[n]() for n in names}
-        for pdf in it:
-            if full_mask:
-                m = pdf["__mask"].to_numpy()
-                all_ok = bool((m == full_mask).all())
-            else:
-                all_ok = True
-            for n in names:
-                raw = pdf[f"__v_{n}"].to_numpy()
-                if not all_ok and n in bit_of:
-                    raw = raw[(m >> bit_of[n]) & 1 == 1]
-                if hash_keyed[n]:
-                    sks[n].update(to_u64(raw))
-                else:
-                    sks[n].update(np.asarray(raw, dtype=np.float64))
-        yield pd.DataFrame({"name": names,
-                            "sketch": [sks[n].to_bytes() for n in names]})
-
-    parts = prepped.mapInPandas(partials, schema="name string, sketch binary")
-    cls_of = {n: type(protos[n]) for n in names}
-    # the driver fold collects the same RDD it counts partitions on: an
-    # input ending in an exchange runs that map stage once, not twice
-    parts_rdd = parts.rdd
-    n_parts = parts_rdd.getNumPartitions()
-    if n_parts * sum(p.state_nbytes for p in protos.values()) <= _DRIVER_FOLD_BYTES:
-        # rows arrive in partition order, so the fold order (and with it
-        # KLL's compaction, which depends on merge order) is fixed
-        rows = parts_rdd.collect()
-    else:
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            name = pdf["name"].iloc[0]
-            sk = _fold(cls_of[name], pdf["sketch"])
-            return pd.DataFrame({"name": [name], "sketch": [sk.to_bytes()]})
-
-        # two-level (treeAggregate-style) merge: P partials per name first
-        # reduce in `merge_partitions` parallel tasks (salted by the
-        # emitting partition id), so the final per-name task deserializes
-        # <= merge_partitions partials instead of P — at P=100k scan splits
-        # a big-state Bloom would otherwise fan into one O(state x P) task
-        if _needs_level1(n_parts, merge_partitions):
-            parts = (parts.withColumn("__m", F.spark_partition_id() % merge_partitions)
-                          .groupBy("name", "__m")
-                          .applyInPandas(merge, schema="name string, sketch binary"))
-        rows = parts.groupBy("name").applyInPandas(
-            merge, schema="name string, sketch binary").collect()
-    out: dict[str, Sketch] = {}
-    for n in names:  # empty input: every spec still yields its zero sketch
-        bufs = [r["sketch"] for r in rows if r["name"] == n]
-        out[n] = _fold(cls_of[n], bufs) if bufs else factories[n]()
-    return out
+    return _build(df, {n: (cols, factory, None, False)
+                       for n, (cols, factory) in specs.items()},
+                  seed, merge_partitions)
 
 
 # --- grouped (per-key) sketches with salted two-phase merge --------------

@@ -26,11 +26,12 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from pathlib import Path
 from typing import Callable, Sequence
 
 import pandas as pd
 
-from .agg import _batch_values, prepare_input
+from .agg import _batch_values, _fold, prepare_input
 from .config import DEFAULT_SEED
 from .sketches.base import Sketch
 
@@ -109,7 +110,8 @@ def checkpointed_build(spark, input_glob: str | Sequence[str], cols,
     lineage_path = os.path.join(checkpoint_dir, "lineage.jsonl")
     buckets = _assign_buckets(files, n_buckets)
     report = CheckpointReport(checkpoint_dir)
-    cls = type(factory())
+    proto = factory()
+    cls = type(proto)
 
     for i, bucket_files in enumerate(buckets):
         out = _partial_path(checkpoint_dir, i)
@@ -118,12 +120,12 @@ def checkpointed_build(spark, input_glob: str | Sequence[str], cols,
             continue
         t0 = time.time()
         df = spark.read.parquet(*bucket_files)
-        prepped = prepare_input(df, cols, factory(), seed, weight_col)
+        prepped = prepare_input(df, cols, proto, seed, weight_col)
         partial_rows = _counted_partials(prepped, factory).collect()
-        merged = factory()
         rows = sum(r["rows"] for r in partial_rows)
-        for r in partial_rows:
-            merged.merge(cls.from_bytes(bytes(r["sketch"])))
+        merged = _fold(cls, (r["sketch"] for r in partial_rows))
+        if merged is None:  # a bucket whose files give no partition
+            merged = factory()
         payload = merged.to_bytes()
         tmp = out + ".tmp"
         with open(tmp, "wb") as fh:
@@ -147,10 +149,9 @@ def checkpointed_build(spark, input_glob: str | Sequence[str], cols,
             }) + "\n")
         report.buckets.append(BucketResult(i, bucket_files, rows, dt, False))
 
-    final = factory()
-    for i in range(len(buckets)):
-        with open(_partial_path(checkpoint_dir, i), "rb") as fh:
-            final.merge(cls.from_bytes(fh.read()))
+    # never None: ``files`` is non-empty, so there is at least one bucket
+    final = _fold(cls, (Path(_partial_path(checkpoint_dir, i)).read_bytes()
+                        for i in range(len(buckets))))
     return final, report
 
 

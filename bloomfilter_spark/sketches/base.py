@@ -135,8 +135,8 @@ class Sketch(ABC):
     @property
     def state_nbytes(self) -> int:
         """In-memory state size in bytes — what a partial COSTS an executor
-        and (worst case) the wire. Planning decisions (e.g. sketch_df's
-        large-state coalesce) must use this, NOT len(to_bytes()): sparse
+        and (worst case) the wire. Planning decisions (e.g. the build
+        core's large-state coalesce) must use this, NOT len(to_bytes()): sparse
         serialization makes an empty sketch's wire size ~20 bytes while
         its task still allocates the full dense array."""
         return len(self.to_bytes())

@@ -4,12 +4,15 @@ KLL), and per-spec NULL semantics must hold."""
 
 import uuid
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from bloomfilter_spark import agg
-from bloomfilter_spark.agg import build_sketch, multi_sketch_build
+from bloomfilter_spark.agg import (build_sketch, hash_col, multi_sketch_build,
+                                   prehash, sketch_df)
 from bloomfilter_spark.sketches import KLL, BloomFilter, CountMinSketch, HyperLogLog
+from bloomfilter_spark.util import to_u64
 
 
 @pytest.fixture(params=["driver", "executor"])
@@ -90,18 +93,59 @@ def test_multi_sketch_empty_input(spark, fold_path):
     assert out["hll"].estimate() == 0.0
 
 
-def test_multi_sketch_small_input_is_one_stage_without_shuffle(spark):
+def test_sketch_df_empty_input_is_one_zero_sketch(spark):
+    df = spark.createDataFrame([], "k long").where(F.col("k") > 0)
+    rows = sketch_df(df, ["k"], lambda: HyperLogLog(12)).collect()
+    assert len(rows) == 1
+    assert bytes(rows[0]["sketch"]) == HyperLogLog(12).to_bytes()
+
+
+def test_weighted_cms_same_bytes_on_both_merge_paths(spark, events, fold_path):
+    """A weighted CMS over pre-aggregated counts in 4 partials equals the
+    driver-local build from the same hashes and weights."""
+    pre = (events.groupBy("event_type")
+                 .agg(F.count("*").cast("double").alias("cnt")).repartition(4))
+    make = lambda: CountMinSketch(width=4096, depth=5)  # noqa: E731
+    got = build_sketch(pre, ["event_type"], make, weight_col="cnt")
+    rows = pre.select(hash_col(["event_type"]).alias("h"), "cnt").collect()
+    want = make()
+    want.update(to_u64(np.array([r["h"] for r in rows], dtype=np.int64)),
+                np.array([r["cnt"] for r in rows], dtype=np.float64))
+    assert got.to_bytes() == want.to_bytes()
+
+
+def test_prehashed_bloom_same_bytes_on_both_merge_paths(spark, events, fold_path):
+    """A prehashed Bloom over an xxhash64 column in 4 partials equals the
+    driver-local build from the same hashes."""
+    hashed = prehash(events, {"g": ["user_id", "event_type"]}).repartition(4)
+    make = lambda: BloomFilter(1 << 16, 4)  # noqa: E731
+    got = build_sketch(hashed, ["g"], make, prehashed=True)
+    want = make()
+    want.update(to_u64(np.array([r["g"] for r in hashed.collect()], dtype=np.int64)))
+    assert got.to_bytes() == want.to_bytes()
+
+
+# the family build, and the eager single-sketch build over its KLL spec
+_BUILDS = {
+    "multi_sketch_build": multi_sketch_build,
+    "build_sketch": lambda df, specs: {"kll": build_sketch(df, *specs["kll"])},
+}
+
+
+@pytest.mark.parametrize("build", list(_BUILDS))
+def test_multi_sketch_small_input_is_one_stage_without_shuffle(spark, build):
     df, specs = _family(20000, 4, spark)
     out, stages, shuffle_bytes = _run_in_group(
-        spark, lambda: multi_sketch_build(df, specs))
+        spark, lambda: _BUILDS[build](df, specs))
     assert (stages, shuffle_bytes) == (1, 0)
     assert out["kll"].n == 20000
 
 
-def test_multi_sketch_input_exchange_runs_once(spark):
+@pytest.mark.parametrize("build", list(_BUILDS))
+def test_multi_sketch_input_exchange_runs_once(spark, build):
     df, specs = _family(20000, 3, spark)
     df = df.repartition(4, "k")
-    out, stages, _ = _run_in_group(spark, lambda: multi_sketch_build(df, specs))
+    out, stages, _ = _run_in_group(spark, lambda: _BUILDS[build](df, specs))
     # the input's own exchange map stage + the build stage
     assert stages == 2
     assert out["kll"].n == 20000
