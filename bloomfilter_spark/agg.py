@@ -21,8 +21,12 @@ All per-row work is columnar: hashing happens JVM-side via
 Arrow batches. No per-row Python (BASELINE.json input_hint).
 
 Grouped sketches use the salted two-phase topology the north rule names:
-groupBy(keys + salt) partials -> groupBy(keys) merge, so one hot key
+repartition(keys + salt) partials -> per-key merge, so one hot key
 (conv_id skew) fans out across `salt` tasks before the final merge.
+Every per-key table — this merge, and every grouped builder in
+jvm_build — is assembled by one helper, _assemble_by_key: rows sorted by
+key within a partition, one run per key, one pack call per key, no
+pandas frame per key.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from typing import Callable, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .config import DEFAULT_MERGE_PARTITIONS, DEFAULT_SEED
@@ -44,6 +50,12 @@ SKETCH_SCHEMA = "name string, sketch binary"
 # folds on the driver: far below the default spark.driver.maxResultSize
 # (1 GB); P = 10^5 multi-MB partials still take the executor tree merge.
 _DRIVER_FOLD_BYTES = 64 << 20
+
+# Blob bytes after which a grouped assembly sends its output Arrow batch
+# before the input batch ends: many keys closing in one input batch with
+# large sketches (a grouped Bloom sized for its largest key) would
+# otherwise pass the 2 GB offset limit of one binary array.
+_OUT_BATCH_BYTES = 64 << 20
 
 # per-executor cache of deserialized broadcast sketches (avoids re-parsing
 # the sketch for every Arrow batch). Keyed by an explicit unique token that
@@ -431,7 +443,8 @@ def grouped_sketch_table(df: DataFrame, keys: Sequence[str], cols,
     so a single hot key is built by up to `salt` parallel tasks, each
     streaming its partition's Arrow batches into per-key partials (memory
     O(keys-in-partition x state), never O(rows) — see phase1 below);
-    phase 2 merges the <= salt partials per key. This is the north rule's
+    phase 2 merges the <= salt partials per key (merge_grouped_sketches,
+    through the per-key assembly _assemble_by_key). This is the north rule's
     'salted repartitioning and two-level treeAggregate-style partial-sketch
     merge' applied to grouped aggregation.
 
@@ -465,7 +478,7 @@ def grouped_sketch_table(df: DataFrame, keys: Sequence[str], cols,
 
     # Phase 1 is a repartition by (keys, salt) + mapInPandas that folds
     # Arrow batches into one partial per key seen in the partition — NOT a
-    # groupBy().applyInPandas, which would materialize a whole (key, salt)
+    # grouped-map pandas UDF, which would materialize a whole (key, salt)
     # group as a single pandas frame (a hot key's salt-share can be 10^8
     # rows). Streaming over batches keeps peak memory at
     # O(distinct keys in partition x sketch state), independent of row
@@ -496,6 +509,124 @@ def grouped_sketch_table(df: DataFrame, keys: Sequence[str], cols,
     return merge_grouped_sketches(partials, keys, factory)
 
 
+def _nan_free(v):
+    """A nested key's Python value with each NaN replaced by one marker,
+    so == treats NaN as equal to NaN (and -0.0 as 0.0) like Spark."""
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    if isinstance(v, (list, tuple)):
+        return [_nan_free(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _nan_free(x) for k, x in v.items()}
+    return v
+
+
+def _key_breaks(cols: list[pa.Array], n: int) -> np.ndarray:
+    """One bool per adjacent pair of the ``n`` rows of the key columns:
+    True where the key changes. NULL equals NULL and NaN equals NaN, as
+    in Spark's grouping. Arrow has no equality kernel for list and struct
+    keys; those compare as Python values."""
+    out = np.zeros(max(n - 1, 0), dtype=bool)
+    for a in cols:
+        cur, prev = a.slice(1), a.slice(0, n - 1)
+        if pa.types.is_nested(a.type):
+            v = [_nan_free(x) for x in a.to_pylist()]
+            out |= np.array([x != y for x, y in zip(v[1:], v)], dtype=bool)
+            continue
+        same = pc.or_(pc.fill_null(pc.equal(cur, prev), False),
+                      pc.and_(pc.is_null(cur), pc.is_null(prev)))
+        if pa.types.is_floating(a.type):
+            same = pc.or_(same, pc.fill_null(
+                pc.and_(pc.is_nan(cur), pc.is_nan(prev)), False))
+        out |= ~same.to_numpy(zero_copy_only=False)
+    return out
+
+
+def _key_runs(batches: Iterable[pa.RecordBatch], keys: list[str],
+              pack: Callable[[dict[str, np.ndarray]], Sketch]):
+    """(keys..., sketch) batches from key-sorted ``batches``: one row per
+    run of equal keys, ``pack(rows)`` called once per run on its non-key
+    columns. A run open at a batch's end carries into the next, so its
+    rows are concatenated once, when it ends. A batch is sent at each
+    input batch's end, or sooner once its blobs pass _OUT_BATCH_BYTES."""
+    open_key, pieces = None, []  # the run open at the last batch's end
+    done, size = [], 0  # closed (key, blob) runs not yet sent
+
+    def close() -> bytes:
+        cols = pieces[0].keys()
+        rows = pieces[0] if len(pieces) == 1 else {
+            c: np.concatenate([p[c] for p in pieces]) for c in cols}
+        try:
+            return pack(rows).to_bytes()
+        except ValueError as e:
+            key = tuple(k[0].as_py() for k in open_key)
+            raise ValueError(f"key {key!r}: {e}") from e
+
+    def batch() -> pa.RecordBatch:
+        cols = [pa.concat_arrays([k[i] for k, _ in done]) for i in range(len(keys))]
+        return pa.RecordBatch.from_arrays(
+            cols + [pa.array([blob for _, blob in done], pa.binary())],
+            names=keys + ["sketch"])
+
+    for rb in batches:
+        n = rb.num_rows
+        if not n:
+            continue
+        kcols = [rb.column(k) for k in keys]
+        cols = {c: rb.column(c).to_numpy(zero_copy_only=False)
+                for c in rb.schema.names if c not in keys}
+        if open_key is None:
+            open_key = [c.slice(0, 1) for c in kcols]
+        # row i starts a run where it differs from row i-1 (row -1: the open key)
+        starts = np.flatnonzero(_key_breaks(
+            [pa.concat_arrays([o, c]) for o, c in zip(open_key, kcols)], n + 1))
+        a = 0
+        for b in [*starts.tolist(), n]:
+            if b > a:
+                pieces.append({c: v[a:b] for c, v in cols.items()})
+            if b == n:
+                break
+            done.append((open_key, close()))
+            size += len(done[-1][1])
+            open_key, pieces, a = [c.slice(b, 1) for c in kcols], [], b
+            if size >= _OUT_BATCH_BYTES:
+                yield batch()
+                done, size = [], 0
+        if done:
+            yield batch()
+            done, size = [], 0
+    if open_key is not None:
+        done.append((open_key, close()))
+        yield batch()
+
+
+def _assemble_by_key(cells: DataFrame, keys: Sequence[str],
+                     pack: Callable[[dict[str, np.ndarray]], Sketch]) -> DataFrame:
+    """The one per-key assembly of every grouped sketch table: (keys...,
+    sketch binary), one row per distinct ``keys`` value (NULL is a value).
+
+    ``cells`` holds a key's mergeable state as rows; ``pack(rows)`` turns
+    one key's rows — its non-key columns as numpy arrays, by name — into
+    a Sketch; a ValueError from it is raised again naming the key.
+    ``cells`` is repartitioned and sorted by ``keys``, so each key is one
+    run of rows inside a partition (_key_runs). One Arrow stream per key
+    (a grouped-map UDF) costs far more than the pack itself when keys are
+    many and small: over 10,000 small keys, Spark's ``applyInArrow`` took
+    about twice as long and ``applyInPandas`` about five times. Key
+    columns stay Arrow arrays (``mapInArrow``): their values and types
+    come back exactly, NULLs included, with no pandas round trip. An
+    input already hash-partitioned by ``keys`` (a per-key window) adds no
+    exchange."""
+    keys = list(keys)
+    schema = T.StructType([cells.schema[k] for k in keys]
+                          + [T.StructField("sketch", T.BinaryType())])
+    # no keys: all rows are one group, in one task
+    cells = (cells.repartition(*keys).sortWithinPartitions(*keys) if keys
+             else cells.repartition(1))
+    return cells.mapInArrow(lambda batches: _key_runs(batches, keys, pack),
+                            schema=schema)
+
+
 def merge_grouped_sketches(sketch_table: DataFrame, keys: Sequence[str],
                            factory: Callable[[], Sketch]) -> DataFrame:
     """Merge a (keys+..., sketch) table down to one sketch row per `keys`
@@ -504,16 +635,8 @@ def merge_grouped_sketches(sketch_table: DataFrame, keys: Sequence[str],
     coarser groupings never rescan the input."""
     keys = list(keys)
     cls = type(factory())
-    key_fields = [sketch_table.schema[k] for k in keys]
-    out_schema = T.StructType(key_fields + [T.StructField("sketch", T.BinaryType())])
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _fold(cls, pdf["sketch"])
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
-    return sketch_table.groupBy(*keys).applyInPandas(merge, schema=out_schema)
+    return _assemble_by_key(sketch_table.select(*keys, "sketch"), keys,
+                            lambda rows: _fold(cls, rows["sketch"]))
 
 
 def estimate_grouped(sketch_table: DataFrame, keys: Sequence[str],

@@ -27,10 +27,17 @@ and satisfy the same zero-false-negative / FPR-bound / merge-algebra laws.
 
 ANSI note: Kirsch-Mitzenmacher probe derivation needs mod-2^64 wrap
 arithmetic (splitmix64's multiplies). Spark 4 defaults to ANSI mode, where
-long overflow raises, so the Bloom plan is built and executed inside a
+long overflow raises, so the Bloom/CMS/IBLT plans are built inside a
 scoped `spark.sql.ansi.enabled=false` window (`_wrap_arithmetic`), restored
-afterwards — wrap semantics are exactly what the hash math specifies. The
-HLL plan is pure bit-ops and needs no toggle.
+afterwards — wrap semantics are exactly what the hash math specifies.
+Spark binds the evaluation mode when it analyzes a plan, which building
+the DataFrame does, so a grouped table returned from the window runs
+later under any ANSI setting. The HLL plan is pure bit-ops and needs no
+toggle.
+
+Every grouped table (keys..., sketch binary) goes through one per-key
+assembly, `agg._assemble_by_key`, with one pack per family shared by the
+family's global, grouped and one-scan builds.
 """
 
 from __future__ import annotations
@@ -39,14 +46,13 @@ from contextlib import contextmanager
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .config import DEFAULT_SEED, WGL_THRESHOLD_LOCK
-from .agg import _cols, hash_col
+from .agg import _assemble_by_key, _cols, hash_col
 from .sketches.bloom import BloomFilter
 from .sketches.hll import HyperLogLog
-from .operators.sharded import SHARD_TABLE_SCHEMA, shard_geometry
+from .operators.sharded import shard_geometry
 from .util import U64, clz64, log2_power_of_two
 
 _MIN64 = -(1 << 63)
@@ -93,6 +99,16 @@ def _notnull(cs: Sequence[Column]) -> Column:
 # HLL
 # --------------------------------------------------------------------------
 
+def _hll_pack(p: int, regs, mins) -> HyperLogLog:
+    """(register, min unsigned-order key) rows -> HyperLogLog — shared by
+    the global, grouped and one-scan family builds."""
+    sk = HyperLogLog(p)
+    rest = np.asarray(mins, dtype=np.int64).view(U64) ^ U64(1 << 63)
+    sk.registers[np.asarray(regs, dtype=np.int64)] = \
+        np.minimum(clz64(rest) + 1, 64 - p + 1).astype(np.uint8)
+    return sk
+
+
 def hll_build_jvm(df: DataFrame, cols, p: int = 14,
                   seed: int = DEFAULT_SEED) -> HyperLogLog:
     """Build an HLL entirely JVM-side; bit-identical to the kernel build.
@@ -108,13 +124,7 @@ def hll_build_jvm(df: DataFrame, cols, p: int = 14,
              .select(reg.alias("r"), key.alias("k"))
              .groupBy("r").agg(F.min("k").alias("mk"))
              .toPandas())
-    sk = HyperLogLog(p)
-    if len(pdf):
-        rest = (pdf["mk"].to_numpy(dtype=np.int64).view(U64)
-                ^ U64(1 << 63))
-        rho = np.minimum(clz64(rest) + 1, 64 - p + 1).astype(np.uint8)
-        sk.registers[pdf["r"].to_numpy(dtype=np.int64)] = rho
-    return sk
+    return _hll_pack(p, pdf["r"], pdf["mk"])
 
 
 def _clz64_col(c: Column) -> Column:
@@ -181,32 +191,20 @@ def hll_grouped_build_jvm(df: DataFrame, keys, cols, p: int = 14,
     not state). Byte-identical per key to the kernel grouped build
     (`agg.grouped_sketch_table`; tested). One map-side-combined
     `groupBy(keys, register).agg(min(rest))` — ≤ |keys| * 2^p rows reach
-    assembly, never n — then `applyInPandas` packs each key's registers.
-    Persist (warehouse.save_sketch_table), union across corpora, estimate
-    from SQL (sketch_estimate)."""
+    assembly, never n — then `agg._assemble_by_key` packs each key's
+    registers. Persist (warehouse.save_sketch_table), union across
+    corpora, estimate from SQL (sketch_estimate)."""
     HyperLogLog(p)  # validate p
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
     h = hash_col(cs, seed)
     reg = F.shiftrightunsigned(h, 64 - p)
     mapped = F.shiftleft(h, p).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = HyperLogLog(p)
-        rest = pdf["__mk"].to_numpy(dtype=np.int64).view(U64) ^ U64(1 << 63)
-        rho = np.minimum(clz64(rest) + 1, 64 - p + 1).astype(np.uint8)
-        sk.registers[pdf["__reg"].to_numpy(dtype=np.int64)] = rho
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
     per_reg = (df.where(_notnull(cs))
                  .groupBy(*keys, reg.alias("__reg"))
                  .agg(F.min(mapped).alias("__mk")))
-    return per_reg.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _assemble_by_key(per_reg, keys,
+                            lambda r: _hll_pack(p, r["__reg"], r["__mk"]))
 
 
 # --------------------------------------------------------------------------
@@ -318,11 +316,7 @@ def multi_sketch_build_jvm(df: DataFrame, specs: dict,
         kind, a, b = metas[tag]
         sub = cells[cells["t"] == tag]
         if kind == "hll":
-            sk = HyperLogLog(a)
-            if len(sub):
-                rest = sub["mv"].to_numpy(dtype=np.int64).view(U64) ^ U64(1 << 63)
-                rho = np.minimum(clz64(rest) + 1, 64 - a + 1).astype(np.uint8)
-                sk.registers[sub["c"].to_numpy(dtype=np.int64)] = rho
+            sk = _hll_pack(a, sub["c"], sub["mv"])
         elif kind == "ddsketch":
             c = sub["c"].to_numpy(dtype=np.int64)
             code = np.mod(c, 4)          # positive for negative c too
@@ -332,13 +326,8 @@ def multi_sketch_build_jvm(df: DataFrame, specs: dict,
                 np.where(code == 2, 0, np.where(code == 1, -1, 1)),
                 bidx, sub["n"].to_numpy(dtype=np.int64))
         else:
-            w, d = a, b
-            sk = CountMinSketch(width=w, depth=d)
-            if len(sub):
-                flat = sub["c"].to_numpy(dtype=np.int64)
-                sk.table[flat // w, flat % w] = \
-                    sub["n"].to_numpy(dtype=np.int64).view(U64)
-                sk.total = int(sub.loc[flat // w == 0, "n"].sum())
+            flat = sub["c"].to_numpy(dtype=np.int64)
+            sk = _cms_pack(a, b, flat // a, flat % a, sub["n"])
         out[name] = sk
     return out
 
@@ -347,15 +336,25 @@ def multi_sketch_build_jvm(df: DataFrame, specs: dict,
 # Bloom (sharded)
 # --------------------------------------------------------------------------
 
+def _bloom_pack(m: int, k: int, words, bits) -> BloomFilter:
+    """(word index, or-ed word) rows -> BloomFilter(m, k) — shared by the
+    grouped and sharded builds."""
+    bf = BloomFilter(m, k)
+    bf.words[np.asarray(words, dtype=np.int64)] = \
+        np.asarray(bits, dtype=np.int64).view(U64)
+    return bf
+
+
 def _bloom_word_updates(df: DataFrame, cols, n_shards: int, m_shard: int,
-                        k: int, seed: int) -> DataFrame:
-    """(global_word_index, or-ed word value) updates for the sharded filter;
-    same shard routing and K-M/splitmix probe scheme as the kernel path."""
+                        k: int, seed: int, keys: Sequence[str] = ()) -> DataFrame:
+    """(keys..., global_word_index w, or-ed word value bits) updates for
+    the sharded filter, or per key with ``n_shards=1``; same shard routing
+    and K-M/splitmix probe scheme as the kernel path."""
     from .operators.sharded import _shard_shift
     cs = _cols(cols)
     wps = m_shard // 64  # words per shard (power of two)
     h = hash_col(cs, seed)
-    base = df.where(_notnull(cs)).select(h.alias("__h"))
+    base = df.where(_notnull(cs)).select(*keys, h.alias("__h"))
     if n_shards == 1:
         shard = F.lit(0).cast("long")
     else:
@@ -368,11 +367,40 @@ def _bloom_word_updates(df: DataFrame, cols, n_shards: int, m_shard: int,
         mask = F.expr("shiftleft(1L, CAST(__pb AS INT))")
         probes.append(F.struct(word.alias("w"),
                                p_i.bitwiseAND(F.lit(63)).alias("__pb")))
-    exploded = (base.select(F.explode(F.array(*probes)).alias("p"))
-                    .select(F.col("p.w").alias("w"),
+    exploded = (base.select(*keys, F.explode(F.array(*probes)).alias("p"))
+                    .select(*keys, F.col("p.w").alias("w"),
                             F.col("p.__pb").alias("__pb"))
-                    .select("w", mask.alias("m")))
-    return exploded.groupBy("w").agg(F.bit_or("m").alias("bits"))
+                    .select(*keys, "w", mask.alias("m")))
+    return exploded.groupBy(*keys, "w").agg(F.bit_or("m").alias("bits"))
+
+
+def _cms_cells(base: DataFrame, w: int, d: int, extra=()) -> DataFrame:
+    """(extra..., p = struct(r, c)) rows: each row of ``base`` (which has
+    the key hash ``__h``) explodes into its d counter cells. Wrap
+    arithmetic must be active (see cms_build_jvm for the unsigned mod)."""
+    base = base.withColumn("__h2",
+                           _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1)))
+    structs = []
+    for j in range(1, d + 1):
+        base = base.withColumn(f"__g{j}", F.expr(f"__h + {j}L * __h2"))
+        rem = (f"(__g{j} - (shiftrightunsigned(__g{j}, 1) div {w}L)"
+               f" * {2 * w}L)")
+        col = f"(CASE WHEN {rem} >= {w}L THEN {rem} - {w}L ELSE {rem} END)"
+        structs.append(f"struct({j - 1} AS r, {col} AS c)")
+    return base.selectExpr(*extra, f"explode(array({', '.join(structs)})) AS p")
+
+
+def _cms_pack(w: int, d: int, rows, cols, counts) -> "CountMinSketch":
+    """(row, col, count) cells -> CountMinSketch — shared by the global,
+    grouped and one-scan family builds. Every input update lands once in
+    row 0, so row 0's counts sum to the total."""
+    from .sketches.cms import CountMinSketch
+    sk = CountMinSketch(width=w, depth=d)
+    r = np.asarray(rows, dtype=np.int64)
+    n = np.asarray(counts, dtype=np.int64)
+    sk.table[r, np.asarray(cols, dtype=np.int64)] = n.view(U64)
+    sk.total = int(n[r == 0].sum())
+    return sk
 
 
 def cms_build_jvm(df: DataFrame, cols, width: int | None = None,
@@ -400,35 +428,17 @@ def cms_build_jvm(df: DataFrame, cols, width: int | None = None,
     proto = CountMinSketch(width=width, depth=depth, eps=eps, delta=delta)
     w, d = proto.width, proto.depth
     cs = _cols(cols)
-    spark = df.sparkSession
-    with _wrap_arithmetic(spark):
+    with _wrap_arithmetic(df.sparkSession):
         proj = [hash_col(cs, seed).alias("__h")]
         if weight_col is not None:
             proj.append(F.floor(F.col(weight_col)).cast("long").alias("__w"))
-        base = (df.where(_notnull(cs)).select(*proj)
-                  .withColumn("__h2",
-                              _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
-        structs = []
-        for j in range(1, d + 1):
-            base = base.withColumn(f"__g{j}", F.expr(f"__h + {j}L * __h2"))
-            rem = (f"(__g{j} - (shiftrightunsigned(__g{j}, 1) div {w}L)"
-                   f" * {2 * w}L)")
-            col = f"(CASE WHEN {rem} >= {w}L THEN {rem} - {w}L ELSE {rem} END)"
-            structs.append(f"struct({j - 1} AS r, {col} AS c)")
         wsel = ["__w"] if weight_col is not None else []
-        cells = (base.selectExpr(
-                     f"explode(array({', '.join(structs)})) AS p", *wsel)
-                     .groupBy("p.r", "p.c")
-                     .agg((F.sum("__w") if weight_col is not None
-                           else F.count("*")).alias("n")))
-        pdf = cells.toPandas()
-    sk = CountMinSketch(width=w, depth=d)
-    if len(pdf):
-        sk.table[pdf["r"].to_numpy(dtype=np.int64),
-                 pdf["c"].to_numpy(dtype=np.int64)] = \
-            pdf["n"].to_numpy(dtype=np.int64).view(U64)
-        sk.total = int(pdf.loc[pdf["r"] == 0, "n"].sum())
-    return sk
+        pdf = (_cms_cells(df.where(_notnull(cs)).select(*proj), w, d, wsel)
+                 .groupBy("p.r", "p.c")
+                 .agg((F.sum("__w") if weight_col is not None
+                       else F.count("*")).alias("n"))
+                 .toPandas())
+    return _cms_pack(w, d, pdf["r"], pdf["c"], pdf["n"])
 
 
 def cms_grouped_build_jvm(df: DataFrame, keys, cols,
@@ -442,8 +452,8 @@ def cms_grouped_build_jvm(df: DataFrame, keys, cols,
 
     Plan: each row explodes into its d (row, col) cells (same K-M column
     derivation as cms_build_jvm), one codegen `groupBy(keys, r, c).count()`
-    with map-side partial aggregation, then `applyInPandas` per key
-    assembles the table cells into a blob. Shuffle volume is bounded by
+    with map-side partial aggregation, then `agg._assemble_by_key` packs
+    each key's table cells into a blob. Shuffle volume is bounded by
     cells-touched-per-task and at most |keys| * d*w rows reach the
     assembly stage — never n. This is the 100 TB path for per-day /
     per-source heavy-hitter tables that must remain MERGEABLE and
@@ -455,43 +465,14 @@ def cms_grouped_build_jvm(df: DataFrame, keys, cols,
     w, d = proto.width, proto.depth
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
-    spark = df.sparkSession
-    out_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = CountMinSketch(width=w, depth=d)
-        sk.table[pdf["r"].to_numpy(dtype=np.int64),
-                 pdf["c"].to_numpy(dtype=np.int64)] = \
-            pdf["n"].to_numpy(dtype=np.int64).view(U64)
-        sk.total = int(pdf.loc[pdf["r"] == 0, "n"].sum())
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
-    with _wrap_arithmetic(spark):
-        base = (df.where(_notnull(cs))
-                  .select(*keys, hash_col(cs, seed).alias("__h"))
-                  .withColumn("__h2",
-                              _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
-        structs = []
-        for j in range(1, d + 1):
-            base = base.withColumn(f"__g{j}", F.expr(f"__h + {j}L * __h2"))
-            rem = (f"(__g{j} - (shiftrightunsigned(__g{j}, 1) div {w}L)"
-                   f" * {2 * w}L)")
-            col = f"(CASE WHEN {rem} >= {w}L THEN {rem} - {w}L ELSE {rem} END)"
-            structs.append(f"struct({j - 1} AS r, {col} AS c)")
-        cells = (base.selectExpr(*keys,
-                                 f"explode(array({', '.join(structs)})) AS p")
-                     .groupBy(*keys, "p.r", "p.c")
-                     .agg(F.count("*").alias("n")))
-        out = cells.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
-        # materialize inside the wrap window so the executed plan carries
-        # the non-ANSI evaluation mode it was built with
-        out = out.cache()
-        out.count()
-    return out
+    # built inside the wrap window, which binds the non-ANSI evaluation
+    # mode into the plan: no job runs here
+    with _wrap_arithmetic(df.sparkSession):
+        base = df.where(_notnull(cs)).select(*keys, hash_col(cs, seed).alias("__h"))
+        cells = (_cms_cells(base, w, d, keys)
+                   .groupBy(*keys, "p.r", "p.c").agg(F.count("*").alias("n")))
+        return _assemble_by_key(cells, keys,
+                                lambda r: _cms_pack(w, d, r["r"], r["c"], r["n"]))
 
 
 def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
@@ -508,9 +489,9 @@ def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
 
     Plan: k (word, bit) probe pairs per row (same K-M derivation as the
     kernel, n_shards=1 routing), one map-side-combined
-    `groupBy(keys, word).agg(bit_or(mask))`, then `applyInPandas` per key
-    packs words into a blob — at most |keys| * m/64 rows reach assembly,
-    never n.
+    `groupBy(keys, word).agg(bit_or(mask))`, then `agg._assemble_by_key`
+    packs each key's words into a blob — at most |keys| * m/64 rows reach
+    assembly, never n.
 
     Geometry is shared by every key (a mergeable table needs one (m, k)):
     size via ``capacity`` = expected distinct insertions of the LARGEST
@@ -521,46 +502,14 @@ def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
         if capacity is None:
             raise ValueError("pass capacity (+ fpr) or explicit m and k")
         m, k = suggest_sizing(capacity, fpr)
-    proto = BloomFilter(m, k)           # clamps m to a power of two
-    m, wps = proto.num_bits, proto.num_bits // 64
+    m = BloomFilter(m, k).num_bits      # clamps m to a power of two
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cs = _cols(cols)
-    spark = df.sparkSession
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        bf = BloomFilter(m, k)
-        bf.words[pdf["w"].to_numpy(dtype=np.int64)] = \
-            pdf["bits"].to_numpy(dtype=np.int64).view(U64)
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [bf.to_bytes()]
-        return pd.DataFrame(row)
-
-    with _wrap_arithmetic(spark):
-        base = (df.where(_notnull(cs))
-                  .select(*keys, hash_col(cs, seed).alias("__h"))
-                  .withColumn("__h2",
-                              _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))))
-        probes = []
-        for i in range(k):
-            p_i = (F.col("__h") + F.lit(i) * F.col("__h2")) \
-                .bitwiseAND(F.lit(m - 1))
-            probes.append(F.struct(
-                F.shiftrightunsigned(p_i, 6).alias("w"),
-                p_i.bitwiseAND(F.lit(63)).alias("b")))
-        words = (base.select(*keys, F.explode(F.array(*probes)).alias("p"))
-                     .select(*keys, F.col("p.w").alias("w"),
-                             F.expr("shiftleft(1L, CAST(p.b AS INT))")
-                              .alias("m"))
-                     .groupBy(*keys, "w").agg(F.bit_or("m").alias("bits")))
-        out = words.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
-        # materialize inside the wrap window so the executed plan carries
-        # the non-ANSI evaluation mode it was built with
-        out = out.cache()
-        out.count()
-    return out
+    # built inside the wrap window, which binds the non-ANSI evaluation
+    # mode into the plan: no job runs here
+    with _wrap_arithmetic(df.sparkSession):
+        words = _bloom_word_updates(df, cols, 1, m, k, seed, keys)
+        return _assemble_by_key(words, keys,
+                                lambda r: _bloom_pack(m, k, r["w"], r["bits"]))
 
 
 def quantile_grouped_build_preagg(df: DataFrame, keys, col, factory,
@@ -580,34 +529,16 @@ def quantile_grouped_build_preagg(df: DataFrame, keys, col, factory,
     per key at assembly); beyond it use the kernel grouped build
     (`agg.grouped_sketch_table`), whose cost is per-row but
     unconditional."""
-    sk0 = factory()
-    if sk0.HASH_KEYED:
+    if factory().HASH_KEYED:
         raise ValueError("quantile_grouped_build_preagg is for value "
                          "sketches (KLL/TDigest), not hash-keyed ones")
     keys = [keys] if isinstance(keys, str) else list(keys)
     c = _cols([col])[0].cast("double")
-    out_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_cardinality:
-            raise ValueError(
-                f"key {tuple(pdf[k].iloc[0] for k in keys)!r} has > "
-                f"{max_cardinality} distinct values; use the kernel "
-                "grouped build (agg.grouped_sketch_table)")
-        pdf = pdf.sort_values("__v")
-        sk = factory()
-        sk.update_weighted(pdf["__v"].to_numpy(dtype=np.float64),
-                           pdf["__w"].to_numpy(dtype=np.int64))
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
     cells = (df.where(c.isNotNull() & ~F.isnan(c))
                .groupBy(*keys, c.alias("__v"))
                .agg(F.count(F.lit(1)).alias("__w")))
-    return cells.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _assemble_by_key(cells, keys, lambda r: _quantile_pack(
+        factory, r["__v"], r["__w"], max_cardinality))
 
 
 def build_sharded_bloom_jvm(df: DataFrame, cols, capacity: int,
@@ -617,36 +548,39 @@ def build_sharded_bloom_jvm(df: DataFrame, cols, capacity: int,
     (shard int, sketch binary) as operators.sharded.build_sharded_bloom,
     byte-identical, but only m/64 rows ever reach Python."""
     from .operators.sharded import effective_shards
-    spark = df.sparkSession
     n_shards = effective_shards(n_shards)
     m_shard, k = shard_geometry(capacity, fpr, n_shards)
     wps = m_shard // 64
     shift = log2_power_of_two(wps)
-    with _wrap_arithmetic(spark):
+    # built inside the wrap window, which binds the non-ANSI evaluation
+    # mode into the plan: no job runs here
+    with _wrap_arithmetic(df.sparkSession):
         words = _bloom_word_updates(df, cols, n_shards, m_shard, k, seed)
         words = words.withColumn(
             "shard", F.shiftrightunsigned("w", shift).cast("int"))
-
-        def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            bf = BloomFilter(m_shard, k)
-            idx = pdf["w"].to_numpy(dtype=np.int64) & (wps - 1)
-            bf.words[idx] = pdf["bits"].to_numpy(dtype=np.int64).view(U64)
-            return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                                 "sketch": [bf.to_bytes()],
-                                 "n_shards": [n_shards]})
-
-        out = (words.groupBy("shard")
-                    .applyInPandas(assemble, schema=SHARD_TABLE_SCHEMA))
-        # materialize inside the wrap window so the executed plan carries
-        # the non-ANSI evaluation mode it was built with
-        out = out.cache()
-        out.count()
-    return out
+        table = _assemble_by_key(words, ["shard"], lambda r: _bloom_pack(
+            m_shard, k, np.asarray(r["w"], dtype=np.int64) & (wps - 1), r["bits"]))
+        return table.withColumn("n_shards", F.lit(n_shards).cast("int"))
 
 
 # --------------------------------------------------------------------------
 # Theta / KMV
 # --------------------------------------------------------------------------
+
+def _theta_pack(k: int, hf) -> "ThetaSketch":
+    """Distinct unsigned-order hashes (sign bit flipped, any order) ->
+    ThetaSketch in eager-trim canonical state: retained = the k smallest,
+    theta = the (k+1)-th. Shared by the global and grouped builds."""
+    from .sketches.theta import ThetaSketch, _THETA_MAX
+    arr = np.sort(np.asarray(hf, dtype=np.int64).view(U64) ^ U64(1 << 63))
+    arr = arr[arr < _THETA_MAX]
+    sk = ThetaSketch(k)
+    if arr.size > k:
+        sk.theta = arr[k]
+        arr = arr[:k]
+    sk.retained = arr
+    return sk
+
 
 def theta_build_jvm(df: DataFrame, cols, k: int = 4096,
                     seed: int = DEFAULT_SEED,
@@ -673,16 +607,14 @@ def theta_build_jvm(df: DataFrame, cols, k: int = 4096,
     smaller corpus pays one extra filtered scan whose dedup is tiny by
     the same bound — cheap exactly when the fallback full pass is also
     cheap."""
-    from .sketches.theta import ThetaSketch, _THETA_MAX
-    sk = ThetaSketch(k)  # validates k
+    from .sketches.theta import ThetaSketch
+    ThetaSketch(k)  # validates k
     cs = _cols(cols)
     hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
     base = df.where(_notnull(cs)).select(hf.alias("hf"))
 
     def smallest(src: DataFrame) -> np.ndarray:
-        pdf = src.distinct().orderBy("hf").limit(k + 1).toPandas()
-        arr = pdf["hf"].to_numpy(dtype=np.int64).view(U64) ^ U64(1 << 63)
-        return np.sort(arr)
+        return src.distinct().orderBy("hf").limit(k + 1).toPandas()["hf"].to_numpy()
 
     arr = None
     if expected_n is None:
@@ -714,12 +646,7 @@ def theta_build_jvm(df: DataFrame, cols, k: int = 4096,
                 arr = cand
     if arr is None:
         arr = smallest(base)
-    arr = arr[arr < _THETA_MAX]
-    if arr.size > k:
-        sk.theta = arr[k]
-        arr = arr[:k]
-    sk.retained = arr
-    return sk
+    return _theta_pack(k, arr)
 
 
 def theta_grouped_estimate_jvm(df: DataFrame, keys, cols, k: int = 4096,
@@ -765,37 +692,20 @@ def theta_grouped_build_jvm(df: DataFrame, keys, cols, k: int = 4096,
     retained = the k smallest distinct hashes, theta = the (k+1)-th;
     tested). Plan: distinct (key, hash) -> per-key window rank in
     unsigned order, keep rank <= k+1 (≤ |keys| * (k+1) rows reach
-    assembly) -> `applyInPandas` packs each key's retained set. The sort
-    is per-key, shuffle-partitioned, never global."""
+    assembly) -> `agg._assemble_by_key` packs each key's retained set.
+    The sort is per-key, shuffle-partitioned, never global."""
     from pyspark.sql import Window
-    from .sketches.theta import ThetaSketch, _THETA_MAX
+    from .sketches.theta import ThetaSketch
     ThetaSketch(k)  # validate k
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
     hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.sort(pdf["__hf"].to_numpy(dtype=np.int64).view(U64)
-                      ^ U64(1 << 63))
-        arr = arr[arr < _THETA_MAX]
-        sk = ThetaSketch(k)
-        if arr.size > k:
-            sk.theta = arr[k]
-            arr = arr[:k]
-        sk.retained = arr
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
     d = (df.where(_notnull(cs))
            .select(*keys, hf.alias("__hf")).distinct())
     w = Window.partitionBy(*keys).orderBy("__hf")
     ranked = (d.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") <= k + 1).drop("__rn"))
-    return ranked.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _assemble_by_key(ranked, keys, lambda r: _theta_pack(k, r["__hf"]))
 
 
 # --------------------------------------------------------------------------
@@ -833,8 +743,8 @@ def sample_grouped_build_jvm(df: DataFrame, keys, cols, payload_col,
     riding along: min(payload) per distinct (key, hash) collapses
     duplicates in CODEGEN with map-side partial aggregation, a per-key
     window rank keeps k+1 rows (WindowGroupLimit: per-partition top-k,
-    never a global sort), and `applyInPandas` only PACKS O(k) rows per
-    key — Python never sees the corpus.
+    never a global sort), and `agg._assemble_by_key` only PACKS O(k) rows
+    per key — Python never sees the corpus.
 
     Kernel-parity details: payloads are compared as unsigned bytes on
     both sides (Spark's binary/string ordering == python bytes ordering;
@@ -848,24 +758,14 @@ def sample_grouped_build_jvm(df: DataFrame, keys, cols, payload_col,
     cs = _cols(cols)
     hf = hash_col(cs, seed).bitwiseXOR(F.lit(_MIN64))  # unsigned-order key
     pc = F.coalesce(_cols([payload_col])[0].cast("binary"), F.lit(b""))
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _sample_pack(pdf["__hf"].to_numpy(dtype=np.int64),
-                          pdf["__pl"].to_numpy(dtype=object), k)
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
     d = (df.where(_notnull(cs))
            .groupBy(*keys, hf.alias("__hf"))
            .agg(F.min(pc).alias("__pl")))
     w = Window.partitionBy(*keys).orderBy("__hf")
     ranked = (d.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") <= k + 1).drop("__rn"))
-    return ranked.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _assemble_by_key(ranked, keys,
+                            lambda r: _sample_pack(r["__hf"], r["__pl"], k))
 
 
 def sample_build_jvm(df: DataFrame, cols, payload_col, k: int = 1024,
@@ -971,32 +871,21 @@ def wsample_grouped_build_jvm(df: DataFrame, keys, cols, weight_col,
     along): codegen dedup to canonical (key, hash, max-weight,
     min-payload) entries -> exponential rank as a codegen expression ->
     per-key window rank keeps k+1 rows (WindowGroupLimit: per-partition
-    top-k, never a global sort) -> `applyInPandas` packs O(k) rows per
-    key. Python never sees the corpus, and the only shuffle rows are
+    top-k, never a global sort) -> `agg._assemble_by_key` packs O(k) rows
+    per key. Python never sees the corpus, and the only shuffle rows are
     distinct (key, hash) pairs."""
     from pyspark.sql import Window
     from .sketches.wsample import WeightedSampleSketch
     WeightedSampleSketch(k)  # validate k
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _wsample_pack(pdf["__hf"].to_numpy(dtype=np.int64),
-                           pdf["__w"].to_numpy(dtype=np.float64),
-                           pdf["__pl"].to_numpy(dtype=object), k)
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
     d = _wsample_dedup(df, keys, cs, weight_col, payload_col, seed)
     d = d.withColumn("__r", _wsample_rank_col(F.col("__hf"), F.col("__w")))
     w = Window.partitionBy(*keys).orderBy("__r", "__hf")
     ranked = (d.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") <= k + 1).drop("__rn", "__r"))
-    return ranked.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _assemble_by_key(ranked, keys, lambda r: _wsample_pack(
+        r["__hf"], r["__w"], r["__pl"], k))
 
 
 def wsample_build_jvm(df: DataFrame, cols, weight_col, payload_col,
@@ -1127,10 +1016,10 @@ def iblt_grouped_build_jvm(df: DataFrame, keys, cols,
     digest per key (e.g. per ingest day / per shard), byte-identical per
     key to the kernel build over that key's distinct hashes. Same
     topology as the global build with the group keys riding through the
-    codegen aggregation; `applyInPandas` only SCATTERS O(cells) rows per
-    key into the blob — Python never sees the corpus. Blobs subtract/
-    decode against any same-geometry build (kernel, global JVM, or
-    another grouped row)."""
+    codegen aggregation; `agg._assemble_by_key` only SCATTERS O(cells)
+    rows per key into the blob — Python never sees the corpus. Blobs
+    subtract/decode against any same-geometry build (kernel, global JVM,
+    or another grouped row)."""
     from .sketches.iblt import IBLT
     if (max_diff is None) == (num_cells is None):
         raise ValueError("size with exactly one of max_diff= / num_cells=")
@@ -1138,36 +1027,35 @@ def iblt_grouped_build_jvm(df: DataFrame, keys, cols,
              else IBLT(num_cells, num_hashes))
     keys = [keys] if isinstance(keys, str) else list(keys)
     cs = _cols(cols)
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
     m, k = proto.num_cells, proto.num_hashes
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _iblt_scatter(IBLT(m, k),
-                           pdf["cell"].to_numpy(dtype=np.int64),
-                           pdf["cnt"].to_numpy(dtype=np.int64),
-                           pdf["kx"].to_numpy(dtype=np.int64),
-                           pdf["cx"].to_numpy(dtype=np.int64))
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
+    # built inside the wrap window, which binds the non-ANSI evaluation
+    # mode into the plan: no job runs here
     with _wrap_arithmetic(df.sparkSession):
         updates = _iblt_updates(df, cs, k, proto.sub, seed, extra=keys)
-        out = updates.groupBy(*keys).applyInPandas(assemble,
-                                                   schema=out_schema)
-        # materialize inside the wrap window so the executed plan carries
-        # the non-ANSI evaluation mode it was built with (same discipline
-        # as bloom_grouped_build_jvm)
-        out = out.cache()
-        out.count()
-    return out
+        return _assemble_by_key(updates, keys, lambda r: _iblt_scatter(
+            IBLT(m, k), r["cell"], r["cnt"], r["kx"], r["cx"]))
 
 
 # --------------------------------------------------------------------------
 # pre-aggregated quantile builds (KLL / t-digest)
 # --------------------------------------------------------------------------
+
+def _quantile_pack(factory, values, counts, max_cardinality: int):
+    """Distinct (value, count) pairs -> one weighted insert into
+    ``factory()``, in value order, so the blob is a function of the
+    value histogram alone. Shared by the global and grouped builds;
+    raises past ``max_cardinality`` pairs."""
+    if len(values) > max_cardinality:
+        raise ValueError(
+            f"> {max_cardinality} distinct values; use the kernel build "
+            "(agg.build_sketch / agg.grouped_sketch_table) for "
+            "high-cardinality columns")
+    v = np.asarray(values, dtype=np.float64)
+    order = np.argsort(v)
+    sk = factory()
+    sk.update_weighted(v[order], np.asarray(counts, dtype=np.int64)[order])
+    return sk
+
 
 def quantile_build_preagg(df: DataFrame, col, factory,
                           max_cardinality: int = 2_000_000):
@@ -1184,8 +1072,7 @@ def quantile_build_preagg(df: DataFrame, col, factory,
     Raises if the column exceeds ``max_cardinality`` distinct values —
     at that point use the streaming kernel path (agg.build_sketch), whose
     cost is per-row but unconditional."""
-    sk = factory()
-    if sk.HASH_KEYED:
+    if factory().HASH_KEYED:
         raise ValueError("quantile_build_preagg is for value sketches "
                          "(KLL/TDigest), not hash-keyed ones")
     c = _cols([col])[0].cast("double")
@@ -1194,12 +1081,29 @@ def quantile_build_preagg(df: DataFrame, col, factory,
              .agg(F.count(F.lit(1)).alias("w"))
              .limit(max_cardinality + 1)
              .toPandas())
-    if len(pdf) > max_cardinality:
-        raise ValueError(
-            f"column has > {max_cardinality} distinct values; use the "
-            "kernel build (agg.build_sketch) for high-cardinality columns")
-    sk.update_weighted(pdf["v"].to_numpy(dtype=np.float64),
-                       pdf["w"].to_numpy(dtype=np.int64))
+    return _quantile_pack(factory, pdf["v"], pdf["w"], max_cardinality)
+
+
+def _mg_pack(k: int, flags, counts, hashes) -> "MisraGries":
+    """Rank-ordered (grouping flag, count, item hash) rows — the total
+    row (flag 1) first, then the top item counts — -> MisraGries after
+    exactly one trim round: t = the (k+1)-th largest count is subtracted
+    and becomes dec. Shared by the global and grouped builds."""
+    from .sketches.mg import MisraGries
+    sk = MisraGries(k)
+    if not len(counts):
+        return sk
+    flags = np.asarray(flags)
+    assert int(flags[0]) == 1, "the total row must rank first"
+    ct = np.asarray(counts, dtype=np.int64)
+    hs = np.asarray(hashes, dtype=np.int64)[1:].view(U64)
+    sk.n, ct = int(ct[0]), ct[1:]
+    t = int(ct[k]) if ct.size > k else 0  # the (k+1)-th largest count
+    kept = ct[:k] - t
+    pos = kept > 0
+    items, cnts = hs[:k][pos], kept[pos]
+    order = np.argsort(items)
+    sk.items, sk.counts, sk.dec = items[order], cnts[order], t
     return sk
 
 
@@ -1226,30 +1130,17 @@ def mg_build_preagg(df: DataFrame, cols, k: int = 256,
     items have exact <= t = dec); dec <= (n - M)/(k+1) since
     n >= sum(top k+1 counts) = M + (k+1)*t. Deterministic: ties broken
     by (cnt desc, hash asc)."""
-    from .sketches.mg import MisraGries
     cs = _cols(cols)
-    rows = (df.where(_notnull(cs))
-              .select(hash_col(cs, seed).alias("__h"))
-              .rollup("__h")
-              .agg(F.count(F.lit(1)).alias("__c"))
-              .orderBy(F.col("__c").desc(), F.col("__h").asc_nulls_first())
-              .limit(k + 2)
-              .collect())
-    sk = MisraGries(k=k)
-    if not rows:
-        return sk
-    assert rows[0]["__h"] is None, "rollup grand-total row must sort first"
-    sk.n = int(rows[0]["__c"])
-    top = [(r["__h"], int(r["__c"])) for r in rows[1:]]
-    t = top[k][1] if len(top) > k else 0
-    kept = [(h, c - t) for h, c in top[:k] if c - t > 0]
-    sk.dec = t
-    if kept:
-        items = np.array([h for h, _ in kept], dtype=np.int64).view(U64)
-        counts = np.array([c for _, c in kept], dtype=np.int64)
-        order = np.argsort(items)
-        sk.items, sk.counts = items[order], counts[order]
-    return sk
+    pdf = (df.where(_notnull(cs))
+             .select(hash_col(cs, seed).alias("__h"))
+             .rollup("__h")
+             .agg(F.count(F.lit(1)).alias("__c"), F.grouping("__h").alias("__g"))
+             .orderBy(F.col("__c").desc(), F.col("__h").asc_nulls_first())
+             .limit(k + 2)
+             # the total row's NULL __h would turn the column float64
+             .withColumn("__h", F.coalesce(F.col("__h"), F.lit(0)))
+             .toPandas())
+    return _mg_pack(k, pdf["__g"], pdf["__c"], pdf["__h"])
 
 
 def mg_grouped_build_preagg(df: DataFrame, keys, cols, k: int = 256,
@@ -1260,8 +1151,9 @@ def mg_grouped_build_preagg(df: DataFrame, keys, cols, k: int = 256,
     map-side-combined aggregation, a rank-filtered window that keeps only
     each key's top k+1 counts plus its total (WindowGroupLimit prunes to
     k+2 rows per key on both shuffle sides when k+2 <= the optimizer
-    threshold, default 1000), then one trim round in `applyInPandas` —
-    O(|keys| * k) rows ever reach Python, never n.
+    threshold, default 1000), then one trim round in
+    `agg._assemble_by_key` — O(|keys| * k) rows ever reach Python, never
+    n.
 
     Grouping levels: `groupingSets([keys+[item], keys])` computes the
     per-(key, item) counts AND the per-key total n in the same
@@ -1295,34 +1187,16 @@ def mg_grouped_build_preagg(df: DataFrame, keys, cols, k: int = 256,
     top = (counts.withColumn("__rn", F.row_number().over(w))
                  .where(F.col("__rn") <= k + 2)
                  # the total row's __h is NULL; a null in an int64 column
-                 # turns the whole pandas column float64 (53-bit mantissa,
-                 # corrupting hashes), so fill it — assemble never reads
+                 # turns the whole numpy column float64 (53-bit mantissa,
+                 # corrupting hashes), so fill it — the pack never reads
                  # the total row's hash
                  .withColumn("__h", F.coalesce(F.col("__h"), F.lit(0))))
-    out_schema = ", ".join(
-        f"{kk} {df.schema[kk].dataType.simpleString()}" for kk in keys
-    ) + ", sketch binary"
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__rn")
-        sk = MisraGries(k)
-        assert int(pdf["__g"].iloc[0]) == 1, \
-            "per-key total row must rank first"
-        sk.n = int(pdf["__c"].iloc[0])
-        hs = pdf["__h"].iloc[1:].to_numpy(dtype=np.int64).view(U64)
-        ct = pdf["__c"].iloc[1:].to_numpy(dtype=np.int64)
-        t = int(ct[k]) if hs.size > k else 0  # the (k+1)-th largest count
-        kept = ct[:k] - t
-        pos = kept > 0
-        items, cnts = hs[:k][pos], kept[pos]
-        order = np.argsort(items)
-        sk.items, sk.counts = items[order], cnts[order]
-        sk.dec = t
-        row = {kk: [pdf[kk].iloc[0]] for kk in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
+    def pack(r):
+        o = np.argsort(r["__rn"])
+        return _mg_pack(k, r["__g"][o], r["__c"][o], r["__h"][o])
 
-    out = top.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    out = _assemble_by_key(top, keys, pack)
     # the rank<=literal -> WindowGroupLimit rewrite only fires up to the
     # optimizer threshold (default 1000): for larger k, raise it SCOPED —
     # pin the rewrite into this DataFrame's QueryExecution eagerly, then
@@ -1434,8 +1308,9 @@ def ddsketch_grouped_build_jvm(df: DataFrame, keys, col,
     analog of `ddsketch_build_jvm`, byte-identical per key to the kernel
     grouped build (agg.grouped_sketch_table with a DDSketch factory;
     tested). One codegen `groupBy(keys, sign, bucket).count()` with
-    map-side combine, then `applyInPandas` per key assembles histogram
-    rows into blobs: |keys| * occupied-buckets rows reach assembly —
+    map-side combine, then `agg._assemble_by_key` packs each key's
+    histogram rows into a blob: |keys| * occupied-buckets rows reach
+    assembly —
     never n, at ANY per-key value cardinality (the structural advantage
     over quantile_grouped_build_preagg for continuous columns). The
     10^12-row path for per-day / per-tool latency-SLO tables that must
@@ -1443,21 +1318,9 @@ def ddsketch_grouped_build_jvm(df: DataFrame, keys, col,
     from .sketches.ddsketch import DDSketch
     proto = DDSketch(alpha, bucket_limit)
     keys = [keys] if isinstance(keys, str) else list(keys)
-    out_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
-    ) + ", sketch binary"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _ddsketch_assemble(alpha, bucket_limit,
-                                pdf["__s"].to_numpy(dtype=np.int64),
-                                pdf["__i"].to_numpy(dtype=np.int64),
-                                pdf["__n"].to_numpy(dtype=np.int64))
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["sketch"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
     src, sgn, idx = _ddsketch_cells(df, col, proto._log_gamma)
     cells = (src.select(*keys, sgn, idx)
                 .groupBy(*keys, "__s", "__i")
                 .agg(F.count(F.lit(1)).alias("__n")))
-    return cells.groupBy(*keys).applyInPandas(assemble, schema=out_schema)
+    return _assemble_by_key(cells, keys, lambda r: _ddsketch_assemble(
+        alpha, bucket_limit, r["__s"], r["__i"], r["__n"]))

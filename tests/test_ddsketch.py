@@ -277,7 +277,8 @@ def test_grouped_jvm_build_parity_and_plan(spark, rng):
     # plan: the count aggregation runs JVM-side (codegen HashAggregate
     # below the one Python assembly stage), no Python in the scan/agg
     plan = got._jdf.queryExecution().executedPlan().toString()
-    scan_and_agg = plan.split("FlatMapGroupsInPandas")[-1]
+    assert "MapInArrow" in plan
+    scan_and_agg = plan.split("MapInArrow")[-1]
     assert "HashAggregate" in scan_and_agg
     assert "ArrowEvalPython" not in scan_and_agg
     assert "BatchEvalPython" not in plan
