@@ -11,8 +11,7 @@ vectorized Arrow/pandas numpy kernels. See SURVEY.md for the full mapping.
 from .agg import (build_sketch, grouped_sketch_df, hash_col,
                   multi_sketch_build, sketch_df, with_cms_count,
                   with_membership)
-from .jvm_build import (build_sharded_bloom_jvm, cms_build_jvm, hll_build_jvm,
-                        multi_sketch_build_jvm)
+from .jvm_build import cms_build_jvm, hll_build_jvm, multi_sketch_build_jvm
 from .sizing import (SizingError, analytic_fpr, safe_suggest_sizing,
                      suggest_sizing, suggest_sizing_reference)
 from .sketches import KLL, BloomFilter, CountMinSketch, HyperLogLog, Sketch, TDigest
@@ -22,8 +21,8 @@ __version__ = "0.1.0"
 __all__ = [
     "BloomFilter", "HyperLogLog", "CountMinSketch", "TDigest", "KLL", "Sketch",
     "build_sketch", "sketch_df", "grouped_sketch_df", "hash_col",
-    "multi_sketch_build", "hll_build_jvm", "build_sharded_bloom_jvm",
-    "cms_build_jvm", "multi_sketch_build_jvm",
+    "multi_sketch_build", "hll_build_jvm", "cms_build_jvm",
+    "multi_sketch_build_jvm",
     "with_membership", "with_cms_count",
     "suggest_sizing", "safe_suggest_sizing", "suggest_sizing_reference",
     "analytic_fpr", "SizingError",

@@ -354,6 +354,12 @@ def _build(df: DataFrame, specs: dict[str, tuple], seed: int,
             # it KLL's compaction, which depends on merge order) is fixed
             return _fold_named(cls_of, ((r["name"], r["sketch"])
                                         for r in parts_rdd.collect()), factories)
+        # so does the executor merge: it is planned over the counted
+        # internal RDD (the one parts.rdd maps), not as a new query of parts
+        spark = parts.sparkSession
+        parts = DataFrame(spark._jsparkSession.internalCreateDataFrame(
+            parts._jdf.queryExecution().toRdd(), parts._jdf.schema(), False),
+            spark)
         if _needs_level1(n_parts, merge_partitions):
             parts = _merge_level(parts, cls_of, merge_partitions)
         final = _merge_level(parts, cls_of, 1, factories)
@@ -374,7 +380,8 @@ def sketch_df(df: DataFrame, cols, factory: Callable[[], Sketch],
     parallel merge tasks, only past 4x that fan-in] -> 1 final merge task,
     all on executors (see ``_build``). The partial count is read when
     this is called, so an input ending in an exchange runs that map stage
-    at that point (Spark plans it adaptively)."""
+    at that point (Spark plans it adaptively), and only then: the
+    returned frame reads the RDD that was counted."""
     return _build(df, {"sketch": (cols, factory, weight_col, prehashed)}, seed,
                   DEFAULT_MERGE_PARTITIONS, eager=False).select("sketch")
 
@@ -473,50 +480,68 @@ def grouped_sketch_table(df: DataFrame, keys: Sequence[str], cols,
 
     key_fields = [prepped.schema[k] for k in keys]
     partial_schema = T.StructType(key_fields + [T.StructField("sketch", T.BinaryType())])
-
     hash_keyed = proto.HASH_KEYED
+    order = [(k, "ascending") for k in keys]
 
-    # Phase 1 is a repartition by (keys, salt) + mapInPandas that folds
+    # Phase 1 is a repartition by (keys, salt) + mapInArrow that folds
     # Arrow batches into one partial per key seen in the partition — NOT a
-    # grouped-map pandas UDF, which would materialize a whole (key, salt)
-    # group as a single pandas frame (a hot key's salt-share can be 10^8
-    # rows). Streaming over batches keeps peak memory at
-    # O(distinct keys in partition x sketch state), independent of row
-    # counts; a partition holding several salt-shares of one key merges
-    # them early (fewer phase-2 partials, same result by associativity).
-    def phase1(it: Iterable[pd.DataFrame]):
-        sks: dict[tuple, Sketch] = {}
-        for pdf in it:
-            for kt, sub in pdf.groupby(keys, sort=False, dropna=False):
-                if not isinstance(kt, tuple):
-                    kt = (kt,)
-                sk = sks.get(kt)
-                if sk is None:
-                    sk = sks[kt] = factory()
-                v = sub["__v"].to_numpy()
-                sk.update(to_u64(v) if hash_keyed else np.asarray(v, dtype=np.float64))
-        if sks:
-            out = {k: [kt[i] for kt in sks] for i, k in enumerate(keys)}
-            out["sketch"] = [sk.to_bytes() for sk in sks.values()]
-            yield pd.DataFrame(out)
+    # grouped-map UDF, which would materialize a whole (key, salt) group
+    # at once (a hot key's salt-share can be 10^8 rows). Streaming over
+    # batches keeps peak memory at O(distinct keys in partition x sketch
+    # state), independent of row counts; a partition holding several
+    # salt-shares of one key merges them early (fewer phase-2 partials,
+    # same result by associativity). Each batch is sorted by key and cut
+    # into runs (_key_breaks); key values stay Arrow arrays, so they come
+    # back exact (a long past 2^53 beside a NULL included). A new key's
+    # values are copied out (take), so no input batch outlives its turn.
+    def phase1(batches: Iterable[pa.RecordBatch]):
+        sks: dict[tuple, tuple[list[pa.Array], Sketch]] = {}
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            try:
+                rb = rb.take(pc.sort_indices(rb, sort_keys=order))
+            except (pa.ArrowNotImplementedError, pa.ArrowTypeError):
+                pass  # a list key has no sort kernel: unsorted runs still fold right
+            kcols = [rb.column(k) for k in keys]
+            v = rb.column("__v").to_numpy(zero_copy_only=False)
+            v = to_u64(v) if hash_keyed else np.asarray(v, dtype=np.float64)
+            bounds = [0, *(np.flatnonzero(_key_breaks(kcols, n)) + 1).tolist(), n]
+            for a, b in zip(bounds, bounds[1:]):
+                kt = tuple(_nan_free(c[a].as_py(), hashable=True) for c in kcols)
+                entry = sks.get(kt)
+                if entry is None:
+                    entry = sks[kt] = ([c.take([a]) for c in kcols], factory())
+                entry[1].update(v[a:b])
+        done, size = [], 0
+        for key, sk in sks.values():
+            done.append((key, sk.to_bytes()))
+            size += len(done[-1][1])
+            if size >= _OUT_BATCH_BYTES:
+                yield _sketch_batch(done, keys)
+                done, size = [], 0
+        if done:
+            yield _sketch_batch(done, keys)
 
-    if pre_partitioned:
-        partials = prepped.mapInPandas(phase1, schema=partial_schema)
-    else:
-        partials = (prepped.repartition(*keys, "__salt")
-                           .select(*keys, "__v")
-                           .mapInPandas(phase1, schema=partial_schema))
+    if not pre_partitioned:
+        prepped = prepped.repartition(*keys, "__salt").select(*keys, "__v")
+    partials = prepped.mapInArrow(phase1, schema=partial_schema)
     return merge_grouped_sketches(partials, keys, factory)
 
 
-def _nan_free(v):
-    """A nested key's Python value with each NaN replaced by one marker,
-    so == treats NaN as equal to NaN (and -0.0 as 0.0) like Spark."""
+def _nan_free(v, hashable: bool = False):
+    """A key's Python value with each NaN replaced by one marker, so ==
+    treats NaN as equal to NaN (and -0.0 as 0.0) like Spark; with
+    ``hashable``, lists become tuples and dicts item tuples."""
     if isinstance(v, float) and v != v:
         return "NaN"
     if isinstance(v, (list, tuple)):
-        return [_nan_free(x) for x in v]
+        out = [_nan_free(x, hashable) for x in v]
+        return tuple(out) if hashable else out
     if isinstance(v, dict):
+        if hashable:
+            return tuple((k, _nan_free(x, True)) for k, x in v.items())
         return {k: _nan_free(x) for k, x in v.items()}
     return v
 
@@ -542,6 +567,15 @@ def _key_breaks(cols: list[pa.Array], n: int) -> np.ndarray:
     return out
 
 
+def _sketch_batch(done: list[tuple[list[pa.Array], bytes]],
+                  keys: list[str]) -> pa.RecordBatch:
+    """(keys..., sketch) Arrow batch of (one-row key arrays, blob) pairs."""
+    cols = [pa.concat_arrays([k[i] for k, _ in done]) for i in range(len(keys))]
+    return pa.RecordBatch.from_arrays(
+        cols + [pa.array([blob for _, blob in done], pa.binary())],
+        names=keys + ["sketch"])
+
+
 def _key_runs(batches: Iterable[pa.RecordBatch], keys: list[str],
               pack: Callable[[dict[str, np.ndarray]], Sketch]):
     """(keys..., sketch) batches from key-sorted ``batches``: one row per
@@ -561,12 +595,6 @@ def _key_runs(batches: Iterable[pa.RecordBatch], keys: list[str],
         except ValueError as e:
             key = tuple(k[0].as_py() for k in open_key)
             raise ValueError(f"key {key!r}: {e}") from e
-
-    def batch() -> pa.RecordBatch:
-        cols = [pa.concat_arrays([k[i] for k, _ in done]) for i in range(len(keys))]
-        return pa.RecordBatch.from_arrays(
-            cols + [pa.array([blob for _, blob in done], pa.binary())],
-            names=keys + ["sketch"])
 
     for rb in batches:
         n = rb.num_rows
@@ -590,14 +618,14 @@ def _key_runs(batches: Iterable[pa.RecordBatch], keys: list[str],
             size += len(done[-1][1])
             open_key, pieces, a = [c.slice(b, 1) for c in kcols], [], b
             if size >= _OUT_BATCH_BYTES:
-                yield batch()
+                yield _sketch_batch(done, keys)
                 done, size = [], 0
         if done:
-            yield batch()
+            yield _sketch_batch(done, keys)
             done, size = [], 0
     if open_key is not None:
         done.append((open_key, close()))
-        yield batch()
+        yield _sketch_batch(done, keys)
 
 
 def _assemble_by_key(cells: DataFrame, keys: Sequence[str],
@@ -645,19 +673,22 @@ def estimate_grouped(sketch_table: DataFrame, keys: Sequence[str],
     """(keys..., <estimate columns...>) from a (keys..., sketch) table."""
     keys = list(keys)
     cls = type(factory())
-    key_fields = [sketch_table.schema[k] for k in keys]
-    est_fields = [T.StructField(name, T.DoubleType()) for name in estimates]
-    out_schema = T.StructType(key_fields + est_fields)
+    out_schema = T.StructType([sketch_table.schema[k] for k in keys]
+                              + [T.StructField(name, T.DoubleType())
+                                 for name in estimates])
 
-    def est(it: Iterable[pd.DataFrame]):
-        for pdf in it:
-            row = {k: pdf[k].to_numpy() for k in keys}
-            sks = [cls.from_bytes(bytes(b)) for b in pdf["sketch"]]
-            for name, fn in estimates.items():
-                row[name] = [float(fn(s)) for s in sks]
-            yield pd.DataFrame(row)
+    # Arrow in and out: key values pass through untouched (no pandas
+    # float64 round trip for a long key column holding a NULL)
+    def est(batches: Iterable[pa.RecordBatch]):
+        for rb in batches:
+            sks = [cls.from_bytes(b) for b in rb.column("sketch").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(k) for k in keys]
+                + [pa.array([float(fn(s)) for s in sks], pa.float64())
+                   for fn in estimates.values()],
+                names=keys + list(estimates))
 
-    return sketch_table.mapInPandas(est, schema=out_schema)
+    return sketch_table.select(*keys, "sketch").mapInArrow(est, schema=out_schema)
 
 
 def grouped_sketch_df(df: DataFrame, keys: Sequence[str], cols,

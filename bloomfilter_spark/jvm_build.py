@@ -15,15 +15,17 @@ Python:
         whatever n is.
 
   Bloom bit array OR of k probes   ==  explode k (word, 1<<bit) pairs
-                                        -> groupBy(word).agg(bit_or(mask))
-        -> at most m/64 rows cross the pipe, whatever n is. Map-side
-        partial bit_or combines first, so shuffle volume is also bounded
-        by words-touched-per-task, not rows.
+        (per key)                       -> groupBy(key, word).agg(bit_or(mask))
+        -> at most m/64 rows per key cross the pipe, whatever n is.
+        Map-side partial bit_or combines first, so shuffle volume is also
+        bounded by words-touched-per-task, not rows.
 
 Both produce BIT-IDENTICAL state to the numpy kernel path (asserted in
 tests/test_jvm_build.py), so JVM-built and kernel-built sketches merge
-freely, answer membership through the same broadcast/cogroup query paths,
-and satisfy the same zero-false-negative / FPR-bound / merge-algebra laws.
+freely, answer the same query paths, and satisfy the same
+zero-false-negative / FPR-bound / merge-algebra laws. The sharded Bloom
+filter has one build, the kernel's (operators.sharded.build_sharded_bloom):
+its hash-only shuffle beat a JVM word-reduced build at 16 and 64 shards.
 
 ANSI note: Kirsch-Mitzenmacher probe derivation needs mod-2^64 wrap
 arithmetic (splitmix64's multiplies). Spark 4 defaults to ANSI mode, where
@@ -52,8 +54,7 @@ from .config import DEFAULT_SEED, WGL_THRESHOLD_LOCK
 from .agg import _assemble_by_key, _cols, hash_col
 from .sketches.bloom import BloomFilter
 from .sketches.hll import HyperLogLog
-from .operators.sharded import shard_geometry
-from .util import U64, clz64, log2_power_of_two
+from .util import U64, clz64
 
 _MIN64 = -(1 << 63)
 
@@ -333,39 +334,30 @@ def multi_sketch_build_jvm(df: DataFrame, specs: dict,
 
 
 # --------------------------------------------------------------------------
-# Bloom (sharded)
+# Bloom (grouped)
 # --------------------------------------------------------------------------
 
 def _bloom_pack(m: int, k: int, words, bits) -> BloomFilter:
-    """(word index, or-ed word) rows -> BloomFilter(m, k) — shared by the
-    grouped and sharded builds."""
+    """(word index, or-ed word) rows -> BloomFilter(m, k)."""
     bf = BloomFilter(m, k)
     bf.words[np.asarray(words, dtype=np.int64)] = \
         np.asarray(bits, dtype=np.int64).view(U64)
     return bf
 
 
-def _bloom_word_updates(df: DataFrame, cols, n_shards: int, m_shard: int,
-                        k: int, seed: int, keys: Sequence[str] = ()) -> DataFrame:
-    """(keys..., global_word_index w, or-ed word value bits) updates for
-    the sharded filter, or per key with ``n_shards=1``; same shard routing
-    and K-M/splitmix probe scheme as the kernel path."""
-    from .operators.sharded import _shard_shift
+def _bloom_word_updates(df: DataFrame, cols, m: int, k: int, seed: int,
+                        keys: Sequence[str]) -> DataFrame:
+    """(keys..., word index w, or-ed word value bits) updates of a per-key
+    BloomFilter(m, k); same K-M/splitmix probe scheme as the kernel."""
     cs = _cols(cols)
-    wps = m_shard // 64  # words per shard (power of two)
     h = hash_col(cs, seed)
     base = df.where(_notnull(cs)).select(*keys, h.alias("__h"))
-    if n_shards == 1:
-        shard = F.lit(0).cast("long")
-    else:
-        shard = F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards))
     h2 = _splitmix64_col(F.col("__h")).bitwiseOR(F.lit(1))
     probes = []
     for i in range(k):
-        p_i = (F.col("__h") + F.lit(i) * h2).bitwiseAND(F.lit(m_shard - 1))
-        word = shard * F.lit(wps) + F.shiftrightunsigned(p_i, 6)
+        p_i = (F.col("__h") + F.lit(i) * h2).bitwiseAND(F.lit(m - 1))
         mask = F.expr("shiftleft(1L, CAST(__pb AS INT))")
-        probes.append(F.struct(word.alias("w"),
+        probes.append(F.struct(F.shiftrightunsigned(p_i, 6).alias("w"),
                                p_i.bitwiseAND(F.lit(63)).alias("__pb")))
     exploded = (base.select(*keys, F.explode(F.array(*probes)).alias("p"))
                     .select(*keys, F.col("p.w").alias("w"),
@@ -480,15 +472,14 @@ def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
                             m: int | None = None, k: int | None = None,
                             seed: int = DEFAULT_SEED) -> DataFrame:
     """Per-key Bloom filter table (keys..., sketch binary) with all probe
-    and OR work in codegen — the grouped analog of
-    `build_sharded_bloom_jvm`, byte-identical per key to the kernel
+    and OR work in codegen, byte-identical per key to the kernel
     grouped build (`agg.grouped_sketch_table` with a Bloom factory;
     tested). The per-day / per-source "seen-set" table: persist it
     (warehouse.save_sketch_table), union it incrementally, probe it from
     SQL (bloom_contains).
 
     Plan: k (word, bit) probe pairs per row (same K-M derivation as the
-    kernel, n_shards=1 routing), one map-side-combined
+    kernel), one map-side-combined
     `groupBy(keys, word).agg(bit_or(mask))`, then `agg._assemble_by_key`
     packs each key's words into a blob — at most |keys| * m/64 rows reach
     assembly, never n.
@@ -507,7 +498,7 @@ def bloom_grouped_build_jvm(df: DataFrame, keys, cols,
     # built inside the wrap window, which binds the non-ANSI evaluation
     # mode into the plan: no job runs here
     with _wrap_arithmetic(df.sparkSession):
-        words = _bloom_word_updates(df, cols, 1, m, k, seed, keys)
+        words = _bloom_word_updates(df, cols, m, k, seed, keys)
         return _assemble_by_key(words, keys,
                                 lambda r: _bloom_pack(m, k, r["w"], r["bits"]))
 
@@ -539,28 +530,6 @@ def quantile_grouped_build_preagg(df: DataFrame, keys, col, factory,
                .agg(F.count(F.lit(1)).alias("__w")))
     return _assemble_by_key(cells, keys, lambda r: _quantile_pack(
         factory, r["__v"], r["__w"], max_cardinality))
-
-
-def build_sharded_bloom_jvm(df: DataFrame, cols, capacity: int,
-                            fpr: float = 0.01, n_shards: int = 32,
-                            seed: int = DEFAULT_SEED) -> DataFrame:
-    """JVM-reduced sharded Bloom build: returns the same shard table
-    (shard int, sketch binary) as operators.sharded.build_sharded_bloom,
-    byte-identical, but only m/64 rows ever reach Python."""
-    from .operators.sharded import effective_shards
-    n_shards = effective_shards(n_shards)
-    m_shard, k = shard_geometry(capacity, fpr, n_shards)
-    wps = m_shard // 64
-    shift = log2_power_of_two(wps)
-    # built inside the wrap window, which binds the non-ANSI evaluation
-    # mode into the plan: no job runs here
-    with _wrap_arithmetic(df.sparkSession):
-        words = _bloom_word_updates(df, cols, n_shards, m_shard, k, seed)
-        words = words.withColumn(
-            "shard", F.shiftrightunsigned("w", shift).cast("int"))
-        table = _assemble_by_key(words, ["shard"], lambda r: _bloom_pack(
-            m_shard, k, np.asarray(r["w"], dtype=np.int64) & (wps - 1), r["bits"]))
-        return table.withColumn("n_shards", F.lit(n_shards).cast("int"))
 
 
 # --------------------------------------------------------------------------

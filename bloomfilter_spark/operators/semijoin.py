@@ -86,16 +86,18 @@ def sharded_bloom_semi_join(fact: DataFrame, dim: DataFrame, on: list[str],
     (cogroup-by-shard membership, no broadcast, each probe task touches
     one shard's bytes). Same exactness contract as bloom_semi_join;
     plans.plan_bloom decides when this path is required."""
-    from .sharded import build_sharded_bloom, sharded_membership
+    from .sharded import build_sharded_bloom, effective_shards, sharded_membership
 
     keys = _dim_keys(dim, on, dim_on)
     if capacity is None:
         capacity = keys.distinct().count()
+    # lazy: the returned plan reads the shard table once, and the build's
+    # shard count is known here, so the call persists nothing and runs no
+    # job beyond the sizing count
     shards = build_sharded_bloom(keys, on, capacity=max(capacity, 1),
-                                 fpr=fpr, n_shards=n_shards, seed=seed).persist()
-    shards.count()  # materialize once; probes reuse the built table
+                                 fpr=fpr, n_shards=n_shards, seed=seed)
     mem = sharded_membership(fact, shards, on, out_col="__bf_member",
-                             seed=seed)
+                             seed=seed, n_shards=effective_shards(n_shards))
     pre = mem.where(F.col("__bf_member")).drop("__bf_member")
     if not exact:
         return pre

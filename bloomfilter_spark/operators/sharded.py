@@ -19,22 +19,32 @@ be. The sharded design keeps the *filter itself* distributed:
     shard sizes are uniform by construction regardless of key skew (the
     salted two-phase topology remains where skew is real: per-KEY sketches
     in agg.grouped_sketch_df, where a key like a hot conv_id is the group).
-    Per task memory = total_bits/partitions (e.g. 16 GiB total across 1024
-    tasks = 16 MiB/task at the 10^12-turn sizing).
+    A hot DUPLICATE key is the one skew left; ``pre_dedup`` collapses it
+    map-side. Per task memory = total_bits/partitions (e.g. 16 GiB total
+    across 1024 tasks = 16 MiB/task at the 10^12-turn sizing). This is the
+    one sharded build: a JVM word-reduced build (bit_or per probe word)
+    gave the same bytes in about twice the time at 16 and 64 shards
+    (docs/ARCHITECTURE.md has the numbers).
   - query: cogroup(probes by shard, shard table by shard) -> vectorized
     membership inside applyInPandas — probes shuffle by shard (small rows);
     each task deserializes exactly one shard once
+  - set algebra: merge_shard_tables (union / intersect) and
+    fold_shard_table (coarser shard count) are one per-shard fold over the
+    table's O(S) rows; the corpus is never touched
 
 Zero-false-negative and merge-algebra guarantees carry over shard-wise.
 """
 
 from __future__ import annotations
 
+import functools
+from typing import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from ..agg import hash_col
+from ..agg import _cols, hash_col
 from ..config import DEFAULT_SEED
 from ..sizing import suggest_sizing
 from ..sketches.bloom import BloomFilter
@@ -63,26 +73,17 @@ def _shard_shift(n_shards: int) -> int:
 
 
 def shard_of(h: np.ndarray, n_shards: int) -> np.ndarray:
-    """numpy-side shard id of base hashes (uint64) — mirrors _routed."""
+    """numpy-side shard id of base hashes (uint64) — mirrors _shard_col."""
     if n_shards == 1:
         return np.zeros(h.shape, dtype=np.int64)
     return (h >> np.uint64(_shard_shift(n_shards))).astype(np.int64)
 
 
-def _routed(df: DataFrame, cols, n_shards: int, seed: int) -> DataFrame:
-    """(h, shard) projection: base hash + top-bits shard route."""
-    from ..agg import _cols
-    cs = _cols(cols)
-    cond = cs[0].isNotNull()
-    for c in cs[1:]:
-        cond = cond & c.isNotNull()
-    h = hash_col(cs, seed)
-    base = df.where(cond).select(h.alias("__h"))
+def _shard_col(n_shards: int) -> Column:
+    """JVM-side int shard id of the base hash column ``__h``."""
     if n_shards == 1:
-        return base.withColumn("__shard", F.lit(0))
-    return base.withColumn(
-        "__shard",
-        F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards)).cast("int"))
+        return F.lit(0)
+    return F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards)).cast("int")
 
 
 def shard_geometry(capacity: int, fpr: float, n_shards: int) -> tuple[int, int]:
@@ -99,33 +100,31 @@ def effective_shards(n_shards: int) -> int:
 
 
 def build_sharded_bloom(df: DataFrame, cols, capacity: int, fpr: float = 0.01,
-                        n_shards: int = 32, salt: int = 4,
-                        seed: int = DEFAULT_SEED,
-                        build_partitions: int | None = None,
+                        n_shards: int = 32, seed: int = DEFAULT_SEED,
                         pre_dedup: bool = False,
                         with_counts: bool = False) -> DataFrame:
     """Returns the shard table (shard int, sketch binary, n_shards int),
     one row per non-empty shard. Lazy — persist() it for repeated querying.
 
-    ``salt`` is kept for API stability but unused: shard routing takes the
-    top bits of the base hash, so shard sizes are uniform over DISTINCT
-    keys even under extreme key skew. A duplicate-heavy single key (one
-    hot (conv_id, text) repeated billions of times) still hashes to one
-    shard and serializes into that shard's task; set ``pre_dedup=True`` to
-    collapse duplicates map-side (per-Arrow-batch np.unique before the
-    shuffle — one extra Python pass over the 8-byte hash column, bounding
-    the hot task's input to one row per key per source batch).
-    ``n_shards`` is rounded up to a power of two. ``build_partitions``
-    defaults to the session's shuffle partitioning, capped at n_shards.
-    ``with_counts`` adds an n_rows column (per-shard rows folded in, for
-    lineage metrics — counts are post-dedup when pre_dedup is set)."""
-    del salt
+    Shard routing takes the top bits of the base hash, so shard sizes are
+    uniform over DISTINCT keys even under extreme key skew. A
+    duplicate-heavy single key (one hot (conv_id, text) repeated billions
+    of times) still hashes to one shard and serializes into that shard's
+    task; set ``pre_dedup=True`` to collapse duplicates map-side
+    (per-Arrow-batch np.unique before the shuffle — one extra Python pass
+    over the 8-byte hash column, bounding the hot task's input to one row
+    per key per source batch). ``n_shards`` is rounded up to a power of
+    two; the build runs in min(n_shards, spark.sql.shuffle.partitions)
+    tasks. ``with_counts`` adds an n_rows column (per-shard rows folded
+    in, for lineage metrics — counts are post-dedup when pre_dedup is
+    set)."""
     n_shards = effective_shards(n_shards)
     m_shard, k = shard_geometry(capacity, fpr, n_shards)
-    routed = _routed(df, cols, n_shards, seed)
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    parts = min(n_shards, build_partitions or sp)
-    routed = routed.select("__h")
+    cs = _cols(cols)
+    notnull = functools.reduce(lambda a, b: a & b, [c.isNotNull() for c in cs])
+    routed = df.where(notnull).select(hash_col(cs, seed).alias("__h"))
+    parts = min(n_shards,
+                int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
     if pre_dedup:
         def batch_unique(it):
             for pdf in it:
@@ -135,9 +134,7 @@ def build_sharded_bloom(df: DataFrame, cols, capacity: int, fpr: float = 0.01,
     # partition, so each shard is built once, by one task — no merge stage.
     # Only the 8-byte hash crosses the JVM->Python pipe (the dominant cost
     # of any Python-side build); the shard id re-derives from its top bits.
-    shard_col = (F.lit(0) if n_shards == 1 else
-                 F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards)))
-    routed = (routed.repartition(parts, shard_col.cast("int").alias("__shard"))
+    routed = (routed.repartition(parts, _shard_col(n_shards).alias("__shard"))
                     .select("__h"))
 
     def build(it):
@@ -174,6 +171,35 @@ def build_sharded_bloom(df: DataFrame, cols, capacity: int, fpr: float = 0.01,
     return routed.mapInPandas(build, schema=schema)
 
 
+def _fold_shards(df: DataFrame, guard: Callable[[list[int]], None],
+                 and_of: int = 0, n_out: int | None = None,
+                 num_bits: int | None = None) -> DataFrame:
+    """The per-shard fold under merge_shard_tables and fold_shard_table:
+    ``df``'s (shard, sketch, n_shards) rows grouped by ``shard`` (the
+    output shard id), ``guard`` called on each group's sorted build
+    counts, the group's filters OR-ed — or AND-ed when ``and_of`` > 0,
+    dropping a shard with fewer rows than that (absent from an input) —
+    then bit-folded to ``num_bits`` if given. Rows carry ``n_out`` as
+    their shard count, else the group's own."""
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        counts = sorted(pdf["n_shards"].unique().tolist())
+        guard(counts)
+        if len(pdf) < and_of:
+            return pdf.iloc[:0]
+        op = BloomFilter.intersect if and_of else BloomFilter.merge
+        bf = None
+        for buf in pdf["sketch"]:
+            s = BloomFilter.from_bytes(bytes(buf))
+            bf = s if bf is None else op(bf, s)
+        if num_bits is not None:
+            bf = bf.fold(num_bits)
+        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
+                             "sketch": [bf.to_bytes()],
+                             "n_shards": [n_out or counts[0]]})
+
+    return df.groupBy("shard").applyInPandas(fold, schema=SHARD_TABLE_SCHEMA)
+
+
 def merge_shard_tables(tables, mode: str = "union") -> DataFrame:
     """Per-shard set algebra over shard tables built with identical
     geometry (same capacity/fpr/n_shards) — e.g. per-bucket checkpointed
@@ -186,45 +212,25 @@ def merge_shard_tables(tables, mode: str = "union") -> DataFrame:
     then approximates "in EVERY input" — no false negatives for true
     common elements, FPR bounded by each input's bound. A shard missing
     from any input intersects to absent and is dropped."""
-    import functools
     if mode not in ("union", "intersect"):
         raise ValueError(f"unknown mode {mode!r}")
-    tables = list(tables)
-    n_tables = len(tables)
-    df = functools.reduce(lambda a, b: a.unionByName(b),
-                          [t.select("shard", "sketch", "n_shards")
-                           for t in tables])
+    tables = [t.select("shard", "sketch", "n_shards") for t in tables]
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    def guard(counts: list[int]) -> None:
         # routing guard: shard id s means a DIFFERENT top-bits hash range
         # under a different shard count, and per-shard (m, k) can coincide
-        # across counts (capacity and shards both halved), so the byte-level
-        # geometry check below cannot catch this — fail loudly instead of
-        # silently breaking zero-false-negatives on the merged table
-        if pdf["n_shards"].nunique() > 1:
+        # across counts (capacity and shards both halved), so the
+        # byte-level geometry check cannot catch this — fail loudly
+        # instead of silently breaking zero-false-negatives on the merge
+        if len(counts) > 1:
             raise ValueError(
                 "merge_shard_tables: inputs were built with different "
-                f"n_shards ({sorted(pdf['n_shards'].unique().tolist())}); "
-                "shard ids are not comparable across shard counts — fold "
-                "the finer table down first (fold_shard_table)")
-        if mode == "intersect" and len(pdf) < n_tables:
-            return pd.DataFrame({"shard": pd.Series([], dtype="int32"),
-                                 "sketch": pd.Series([], dtype=object),
-                                 "n_shards": pd.Series([], dtype="int32")})
-        bf = None
-        for buf in pdf["sketch"]:
-            s = BloomFilter.from_bytes(bytes(buf))
-            if bf is None:
-                bf = s
-            elif mode == "union":
-                bf.merge(s)
-            else:
-                bf.intersect(s)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "sketch": [bf.to_bytes()],
-                             "n_shards": [int(pdf["n_shards"].iloc[0])]})
+                f"n_shards ({counts}); shard ids are not comparable across "
+                "shard counts — fold the finer table down first "
+                "(fold_shard_table)")
 
-    return df.groupBy("shard").applyInPandas(merge, schema=SHARD_TABLE_SCHEMA)
+    return _fold_shards(functools.reduce(DataFrame.unionByName, tables), guard,
+                        and_of=len(tables) if mode == "intersect" else 0)
 
 
 def fold_shard_table(shard_table: DataFrame, n_shards: int,
@@ -249,35 +255,22 @@ def fold_shard_table(shard_table: DataFrame, n_shards: int,
     the corpus is never touched."""
     if n_shards < 1 or (n_shards & (n_shards - 1)):
         raise ValueError("n_shards must be a power of two >= 1")
-    new_shard = F.floor(
-        F.col("shard") / (F.col("n_shards") / F.lit(n_shards))).cast("int")
-    df = shard_table.select(new_shard.alias("__new_shard"),
-                            "shard", "sketch", "n_shards")
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        counts = pdf["n_shards"].unique()
+    def guard(counts: list[int]) -> None:
         if len(counts) > 1:
             raise ValueError(
-                "fold_shard_table: mixed build n_shards "
-                f"({sorted(counts.tolist())}) — fold each table "
-                "separately, then merge_shard_tables")
-        old = int(counts[0])
-        if old < n_shards or old % n_shards:
+                f"fold_shard_table: mixed build n_shards ({counts}) — fold "
+                "each table separately, then merge_shard_tables")
+        if counts[0] < n_shards or counts[0] % n_shards:
             raise ValueError(
                 f"fold target n_shards={n_shards} must divide the build "
-                f"count {old} (top-bits routing only nests downward)")
-        bf = None
-        for buf in pdf["sketch"]:
-            s = BloomFilter.from_bytes(bytes(buf))
-            bf = s if bf is None else bf.merge(s)
-        if num_bits is not None:
-            bf = bf.fold(num_bits)
-        return pd.DataFrame({"shard": [int(pdf["__new_shard"].iloc[0])],
-                             "sketch": [bf.to_bytes()],
-                             "n_shards": [n_shards]})
+                f"count {counts[0]} (top-bits routing only nests downward)")
 
-    return df.groupBy("__new_shard").applyInPandas(
-        fold, schema=SHARD_TABLE_SCHEMA)
+    new_shard = F.floor(
+        F.col("shard") / (F.col("n_shards") / F.lit(n_shards))).cast("int")
+    return _fold_shards(
+        shard_table.select(new_shard.alias("shard"), "sketch", "n_shards"),
+        guard, n_out=n_shards, num_bits=num_bits)
 
 
 def sharded_membership(df: DataFrame, shard_table: DataFrame, cols,
@@ -292,7 +285,6 @@ def sharded_membership(df: DataFrame, shard_table: DataFrame, cols,
     routing (zero false negatives hold even when a small corpus left top
     shards empty). Tables persisted without the column fall back to
     max(shard)+1 inference; pass ``n_shards`` explicitly for those."""
-    from ..agg import _cols
     cs = _cols(cols)
     if n_shards is None:
         if "n_shards" in shard_table.columns:
@@ -302,13 +294,8 @@ def sharded_membership(df: DataFrame, shard_table: DataFrame, cols,
                 int(shard_table.agg(F.max("shard")).first()[0]) + 1)
     shard_table = shard_table.select("shard", "sketch")
 
-    withkeys = df.withColumn("__h", hash_col(cs, seed))
-    if n_shards == 1:
-        withkeys = withkeys.withColumn("__shard", F.lit(0))
-    else:
-        withkeys = withkeys.withColumn(
-            "__shard",
-            F.shiftrightunsigned(F.col("__h"), _shard_shift(n_shards)).cast("int"))
+    withkeys = (df.withColumn("__h", hash_col(cs, seed))
+                  .withColumn("__shard", _shard_col(n_shards)))
 
     out_schema = T.StructType(list(withkeys.schema.fields)
                               + [T.StructField(out_col, T.BooleanType())])

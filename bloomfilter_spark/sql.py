@@ -518,7 +518,7 @@ def sketch_fold(sketch: pd.Series, target: pd.Series) -> pd.Series:
     published additive error for MG/KLL/t-digest. Folding UP raises, as
     does a scalable-Bloom blob (its levels own their geometry)."""
     def fold_one(b, t):
-        if b is None or t is None:
+        if b is None or pd.isna(t):  # Arrow hands a NULL int over as NaN
             return None
         sk = _parse(bytes(b))  # fold never mutates its source
         fold = getattr(sk, "fold", None)
@@ -543,8 +543,9 @@ def cms_fold(sketch: pd.Series, width: pd.Series, depth: pd.Series) -> pd.Series
         if not isinstance(sk, CountMinSketch):
             raise TypeError(f"cms_fold needs a CMS blob, got "
                             f"{type(sk).__name__}")
-        return sk.fold(width=None if w is None else int(w),
-                       depth=None if d is None else int(d)).to_bytes()
+        # a NULL width or depth (NaN from Arrow) keeps the blob's own
+        return sk.fold(width=None if pd.isna(w) else int(w),
+                       depth=None if pd.isna(d) else int(d)).to_bytes()
     return pd.Series([fold_one(b, w, d)
                       for b, w, d in zip(sketch, width, depth)])
 

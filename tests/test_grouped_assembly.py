@@ -2,12 +2,14 @@
 (``agg._assemble_by_key``): each key's bytes equal a driver-side build over
 that key's rows alone — across Arrow batch boundaries, for NULL, NaN,
 signed-zero, wide-long, array, struct and two-column keys, with no keys
-at all (one group), and over an empty input. Its output Arrow batches stay under a byte cap however
-many keys close in one input batch, and a pack's ValueError names the
-key. The grouped builders plan no more exchanges than a
-``groupBy().applyInPandas`` did, and the four builders that need wrap
-arithmetic run no job when called and leave the session's persisted
-RDDs and conf as they found them."""
+at all (one group), and over an empty input. The kernel grouped build
+keeps wide long keys exact too, and each shard of the sharded Bloom build
+equals a driver-side filter over the hashes routed to it. Output Arrow
+batches stay under a byte cap however many keys close in one input
+batch, and a pack's ValueError names the key. The grouped builders plan
+no more exchanges than a ``groupBy().applyInPandas`` did, and the three
+builders that need wrap arithmetic run no job when called and leave the
+session's persisted RDDs and conf as they found them."""
 
 import math
 import re
@@ -127,6 +129,58 @@ def test_wide_long_and_nan_keys_come_back_exact(spark):
     got_d = _table(_assemble(cells, ["d"]), ["d"])
     assert set(got_d) == {("NaN",), (1.0,), (2.0,), (0.0,), (3.0,)}
     assert got_d == _driver_side(cells, ["d"], _cms)
+
+
+def test_kernel_grouped_table_keeps_wide_long_keys(spark):
+    """The kernel grouped build (phase 1 and the merge) and
+    estimate_grouped keep key columns in Arrow: keys NULL, 2^62+1, 2^62+2
+    and 2^62+3 in one batch are four exact groups, each equal to
+    hll_grouped_build_jvm's."""
+    from bloomfilter_spark.jvm_build import hll_grouped_build_jvm
+    from bloomfilter_spark.sketches import HyperLogLog
+    big = (1 << 62) + 1
+    df = spark.range(0, 600, 1, 2).select(
+        F.when(F.col("id") % 4 == 0, F.lit(None).cast("long"))
+         .otherwise(F.lit(big) + F.col("id") % 3).alias("a"),
+        F.col("id").alias("v"))
+    make = lambda: HyperLogLog(10)  # noqa: E731
+    want = hll_grouped_build_jvm(df, ["a"], ["v"], p=10)
+    got = _table(agg.grouped_sketch_table(df, ["a"], ["v"], make, salt=2), ["a"])
+    assert set(got) == {(None,), (big,), (big + 1,), (big + 2,)}
+    assert got == _table(want, ["a"])
+    est = agg.estimate_grouped(want, ["a"], make, {"n": lambda s: s.estimate()})
+    assert {r["a"] for r in est.collect()} == {None, big, big + 1, big + 2}
+    # array keys have no Arrow sort kernel and group unsorted; struct keys sort
+    nested = df.select(F.array(F.col("v") % 3, F.lit(1)).alias("l"),
+                       F.struct((F.col("v") % 2).alias("x")).alias("s"), "v")
+    for keys in (["l"], ["s", "l"]):
+        got = _table(agg.grouped_sketch_table(nested, keys, ["v"], make, salt=2), keys)
+        assert got == _table(hll_grouped_build_jvm(nested, keys, ["v"], p=10), keys)
+        assert len(got) == (3 if keys == ["l"] else 6)
+
+
+def test_sharded_bloom_shards_equal_driver_side_filters(spark, lineitem):
+    """Each shard of build_sharded_bloom equals a driver-side
+    BloomFilter(m_shard, k) updated with the hashes shard_of routes to
+    it: one shard, and eight with pre_dedup off and on."""
+    from bloomfilter_spark.operators.sharded import (build_sharded_bloom,
+                                                     shard_geometry, shard_of)
+    cols = ["l_orderkey", "l_linenumber"]
+    n = lineitem.count()
+    h = to_u64(np.array([r[0] for r in lineitem.dropna(subset=cols)
+                         .select(hash_col(cols)).collect()], dtype=np.int64))
+    for n_shards, pre_dedup in ((1, False), (8, False), (8, True)):
+        m, k = shard_geometry(n, 0.01, n_shards)
+        sh = shard_of(h, n_shards)
+        want = {}
+        for s in np.unique(sh):
+            bf = BloomFilter(m, k)
+            bf.update(h[sh == s])
+            want[(int(s),)] = bf.to_bytes()
+        got = _table(build_sharded_bloom(lineitem, cols, capacity=n, fpr=0.01,
+                                         n_shards=n_shards, pre_dedup=pre_dedup),
+                     ["shard"])
+        assert got == want, (n_shards, pre_dedup)
 
 
 def test_array_struct_and_signed_zero_keys(spark):
@@ -264,32 +318,24 @@ def _cms256(hashes) -> CountMinSketch:
     return sk
 
 
-@pytest.mark.parametrize("builder", ["cms", "bloom", "iblt", "sharded"])
+@pytest.mark.parametrize("builder", ["cms", "bloom", "iblt"])
 def test_wrap_arithmetic_builders_run_lazily_under_ansi(spark, events, builder):
     """The plan binds its non-ANSI evaluation mode when built inside the
     wrap window, so no cache()/count() is needed: the call runs no job,
     persists nothing, restores the conf, and the rows collected later at
     spark.sql.ansi.enabled=true are the per-key bytes."""
     from bloomfilter_spark import jvm_build as J
-    from bloomfilter_spark.operators.sharded import build_sharded_bloom
     keys = ["event_type"]
-    if builder == "sharded":
-        keys = ["shard"]
-        want = _table(build_sharded_bloom(events, ["user_id"], capacity=2000,
-                                          fpr=0.01, n_shards=4), keys)
-        build = lambda: J.build_sharded_bloom_jvm(  # noqa: E731
-            events, ["user_id"], capacity=2000, fpr=0.01, n_shards=4)
-    else:
-        pack = {"cms": _cms256, "bloom": _bloom, "iblt": _iblt}[builder]
-        want = _driver_side(_user_hashes(events), keys, pack)
-        build = {
-            "cms": lambda: J.cms_grouped_build_jvm(events, keys, ["user_id"],
-                                                   width=256, depth=3),
-            "bloom": lambda: J.bloom_grouped_build_jvm(events, keys, ["user_id"],
-                                                       m=1 << 12, k=3),
-            "iblt": lambda: J.iblt_grouped_build_jvm(events, keys, ["user_id"],
-                                                     num_cells=512),
-        }[builder]
+    pack = {"cms": _cms256, "bloom": _bloom, "iblt": _iblt}[builder]
+    want = _driver_side(_user_hashes(events), keys, pack)
+    build = {
+        "cms": lambda: J.cms_grouped_build_jvm(events, keys, ["user_id"],
+                                               width=256, depth=3),
+        "bloom": lambda: J.bloom_grouped_build_jvm(events, keys, ["user_id"],
+                                                   m=1 << 12, k=3),
+        "iblt": lambda: J.iblt_grouped_build_jvm(events, keys, ["user_id"],
+                                                 num_cells=512),
+    }[builder]
     sc = spark.sparkContext
     with _conf(spark, "spark.sql.ansi.enabled", "true"):
         persisted = set(sc._jsc.getPersistentRDDs().keySet())
@@ -299,6 +345,4 @@ def test_wrap_arithmetic_builders_run_lazily_under_ansi(spark, events, builder):
         assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
         assert dict(spark.conf.getAll) == conf
         got = _table(table, keys)
-        if builder == "sharded":
-            assert {r["n_shards"] for r in table.collect()} == {4}
     assert got == want and len(got) > 1

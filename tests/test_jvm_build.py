@@ -6,9 +6,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from bloomfilter_spark.agg import build_sketch
-from bloomfilter_spark.jvm_build import (build_sharded_bloom_jvm,
+from bloomfilter_spark.jvm_build import (bloom_grouped_build_jvm,
                                          cms_build_jvm, hll_build_jvm)
-from bloomfilter_spark.operators.sharded import build_sharded_bloom, sharded_membership
 from bloomfilter_spark.sketches import CountMinSketch, HyperLogLog
 
 
@@ -86,33 +85,10 @@ def test_multi_sketch_build_jvm_null_isolation(spark):
     assert fam["cms_k"].total == 3  # the NULL-k row skipped CMS only
 
 
-def test_sharded_bloom_jvm_byte_identical(spark, lineitem):
-    cols = ["l_orderkey", "l_linenumber"]
-    n = lineitem.count()
-    kernel = {r["shard"]: bytes(r["sketch"])
-              for r in build_sharded_bloom(lineitem, cols, capacity=n,
-                                           fpr=0.01, n_shards=8).collect()}
-    jvm_df = build_sharded_bloom_jvm(lineitem, cols, capacity=n,
-                                     fpr=0.01, n_shards=8)
-    jvm = {r["shard"]: bytes(r["sketch"]) for r in jvm_df.collect()}
-    assert kernel.keys() == jvm.keys()
-    for s in kernel:
-        assert kernel[s] == jvm[s], f"shard {s} differs"
-
-
-def test_sharded_bloom_jvm_zero_false_negatives(spark, lineitem):
-    cols = ["l_orderkey", "l_linenumber"]
-    n = lineitem.count()
-    shards = build_sharded_bloom_jvm(lineitem, cols, capacity=n,
-                                     fpr=0.01, n_shards=4)
-    mem = sharded_membership(lineitem, shards, cols)
-    assert mem.where(~F.col("is_member")).count() == 0
-
-
 def test_ansi_mode_restored_after_jvm_build(spark, lineitem):
     prev = spark.conf.get("spark.sql.ansi.enabled")
-    build_sharded_bloom_jvm(lineitem, ["l_orderkey"], capacity=1000,
-                            fpr=0.05, n_shards=2)
+    bloom_grouped_build_jvm(lineitem, ["l_returnflag"], ["l_orderkey"],
+                            capacity=1000, fpr=0.05)
     assert spark.conf.get("spark.sql.ansi.enabled") == prev
 
 

@@ -6,6 +6,7 @@ import uuid
 
 import numpy as np
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from bloomfilter_spark import agg
@@ -35,10 +36,20 @@ def _run_in_group(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    stages = [store.lastStageAttempt(sid)
-              for j in tracker.getJobIdsForGroup(group)
+
+    def attempt(sid):
+        # past spark.ui.retainedStages the status store drops skipped
+        # stages first (their completion time is -1): a missing one was
+        # skipped
+        try:
+            return store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            return None
+
+    stages = [attempt(sid) for j in tracker.getJobIdsForGroup(group)
               for sid in tracker.getJobInfo(j).stageIds]
-    ran = [s for s in stages if s.status().toString() != "SKIPPED"]
+    ran = [s for s in stages
+           if s is not None and s.status().toString() != "SKIPPED"]
     return out, len(ran), sum(s.shuffleWriteBytes() for s in ran)
 
 
@@ -141,13 +152,24 @@ def test_multi_sketch_small_input_is_one_stage_without_shuffle(spark, build):
     assert out["kll"].n == 20000
 
 
-@pytest.mark.parametrize("build", list(_BUILDS))
-def test_multi_sketch_input_exchange_runs_once(spark, build):
+def _sketch_df_kll(df, specs):
+    row = sketch_df(df, *specs["kll"]).collect()[0]
+    return {"kll": KLL.from_bytes(bytes(row["sketch"]))}
+
+
+@pytest.mark.parametrize("build", [*_BUILDS, "executor_merge", "sketch_df"])
+def test_multi_sketch_input_exchange_runs_once(spark, monkeypatch, build):
+    """The input's own exchange map stage runs once: with the build
+    stage that is 2 stages on the driver fold, and 3 with the final merge
+    on the executor merge (fold budget 0, and the lazy sketch_df)."""
     df, specs = _family(20000, 3, spark)
     df = df.repartition(4, "k")
-    out, stages, _ = _run_in_group(spark, lambda: _BUILDS[build](df, specs))
-    # the input's own exchange map stage + the build stage
-    assert stages == 2
+    run = _BUILDS.get(build, _sketch_df_kll)
+    if build == "executor_merge":
+        monkeypatch.setattr(agg, "_DRIVER_FOLD_BYTES", 0)
+        run = multi_sketch_build
+    out, stages, _ = _run_in_group(spark, lambda: run(df, specs))
+    assert stages == (2 if build in _BUILDS else 3)
     assert out["kll"].n == 20000
 
 

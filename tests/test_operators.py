@@ -55,6 +55,30 @@ def test_sharded_bloom_semi_join_exact(spark, lineitem, orders):
         want.select(F.sum("l_orderkey")).first()[0]
 
 
+def test_sharded_bloom_semi_join_leaves_session_clean(spark, lineitem, orders):
+    """The call persists nothing, and its prefiltered rows (exact=False)
+    are the fact rows a shard table over the dim keys passes."""
+    from bloomfilter_spark.operators import sharded_bloom_semi_join
+    from bloomfilter_spark.operators.sharded import (build_sharded_bloom,
+                                                     sharded_membership)
+    hi = orders.where("o_totalprice > 200000")
+    keys = hi.select(F.col("o_orderkey").alias("l_orderkey"))
+    persisted = lambda: set(  # noqa: E731
+        spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    before = persisted()
+    got = sharded_bloom_semi_join(lineitem, hi, ["l_orderkey"],
+                                  dim_on=["o_orderkey"], n_shards=6,
+                                  exact=False)
+    assert persisted() == before
+    table = build_sharded_bloom(keys, ["l_orderkey"],
+                                capacity=keys.distinct().count(), n_shards=8)
+    want = sharded_membership(lineitem, table, ["l_orderkey"]) \
+        .where("is_member").drop("is_member")
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert got.count() >= lineitem.join(keys.distinct(), "l_orderkey", "left_semi").count()
+    assert persisted() == before
+
+
 def test_bloom_anti_join_exact(spark, lineitem, orders):
     hi = orders.where("o_totalprice > 200000")
     got = bloom_anti_join(lineitem, hi, ["l_orderkey"], dim_on=["o_orderkey"])

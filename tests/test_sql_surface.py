@@ -106,6 +106,30 @@ def test_sql_null_sketch_rows(spark):
         "SELECT sketch_estimate(sketch) AS e FROM null_t").first()["e"] is None
 
 
+def test_sql_fold_null_target_beside_non_null(spark):
+    """A NULL target in a batch that also holds a non-NULL one reaches
+    the UDF as NaN: sketch_fold gives NULL, and cms_fold keeps the blob's
+    own width or depth where that argument is NULL."""
+    hll = HyperLogLog(12)
+    hll.update(np.arange(1, 500, dtype=np.uint64))
+    cms = CountMinSketch(width=1024, depth=4)
+    cms.update(np.arange(1, 500, dtype=np.uint64))
+    h, c = hll.to_bytes(), cms.to_bytes()
+    spark.createDataFrame(
+        [(1, h, c, 10, 256, 2), (2, h, c, None, None, None), (3, h, c, 8, 256, None)],
+        "id int, h binary, c binary, t int, w int, d int") \
+        .repartition(1).createOrReplaceTempView("fold_targets")
+    rows = {r["id"]: r for r in spark.sql(
+        "SELECT id, sketch_fold(h, t) AS hf, cms_fold(c, w, d) AS cf "
+        "FROM fold_targets").collect()}
+    assert bytes(rows[1]["hf"]) == hll.fold(10).to_bytes()
+    assert rows[2]["hf"] is None
+    assert bytes(rows[3]["hf"]) == hll.fold(8).to_bytes()
+    assert bytes(rows[1]["cf"]) == cms.fold(width=256, depth=2).to_bytes()
+    assert bytes(rows[2]["cf"]) == cms.fold().to_bytes()
+    assert bytes(rows[3]["cf"]) == cms.fold(width=256).to_bytes()
+
+
 def test_sql_null_sketch_rows_in_probe_functions(spark, events):
     """NULL sketch rows (e.g. from an outer join of sketch tables) yield
     SQL NULL from the probe functions, not a crash (pandas groupby turns

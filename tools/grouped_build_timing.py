@@ -36,6 +36,7 @@ def builders(df):
     from pyspark.sql import functions as F
 
     from bloomfilter_spark import agg, jvm_build as J
+    from bloomfilter_spark.operators.sharded import build_sharded_bloom
     from bloomfilter_spark.sketches import KLL, HyperLogLog
 
     turn = ["conv_id", "turn_idx"]
@@ -64,7 +65,7 @@ def builders(df):
             df, ["tool"], length, lambda: KLL(200)),
         "mg_grouped_build_preagg": lambda: J.mg_grouped_build_preagg(
             tools, ["tool"], ["conv_id"], k=64),
-        "build_sharded_bloom_jvm": lambda: J.build_sharded_bloom_jvm(
+        "build_sharded_bloom": lambda: build_sharded_bloom(
             df, turn, capacity=500_000, fpr=0.01, n_shards=4).select("shard", "sketch"),
     }
 
